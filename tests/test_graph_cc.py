@@ -1,18 +1,15 @@
-"""Connected components: large-star/small-star vs min-label propagation.
+"""Connected components: large-star/small-star vs a union-find reference.
 
-The two implementations share one contract: (node, component=min id).
-twostar must agree with label propagation on every shape, including the
-long chain that makes O(diameter) propagation pathological.
+connected_components_twostar's contract is (node, component=min id).
+It must agree with a plain-Python union-find on every shape, including
+the long chain that makes O(diameter) label propagation pathological.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from thesaurus_based_ner_spark.operators.graph import (
-    connected_components,
-    connected_components_twostar,
-)
+from thesaurus_based_ner_spark.operators.graph import connected_components_twostar
 
 
 def _edges(spark, pairs):
@@ -24,7 +21,24 @@ def _result(df):
     return {(r["node"], r["component"]) for r in df.collect()}
 
 
-def test_twostar_matches_propagation_on_mixed_graph(spark):
+def _union_find(pairs):
+    """Spark-free reference: {(node, min node id of its component)}."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {(x, find(x)) for x in list(parent)}
+
+
+def test_twostar_matches_union_find_on_mixed_graph(spark):
     # two stars, one triangle, one isolated edge
     pairs = [
         (10, 11), (10, 12), (10, 13),          # star at 10
@@ -33,9 +47,7 @@ def test_twostar_matches_propagation_on_mixed_graph(spark):
         (40, 10),                              # connect 40 into star
     ]
     e = _edges(spark, pairs)
-    assert _result(connected_components_twostar(e)) == _result(
-        connected_components(e)
-    )
+    assert _result(connected_components_twostar(e)) == _union_find(pairs)
 
 
 def test_twostar_long_chain_converges_logarithmically(spark):
@@ -97,9 +109,10 @@ def test_pagerank_matches_dense_power_iteration(spark):
 
 def test_twostar_keeps_self_loop_only_nodes(spark):
     # a node appearing only in self-loops must still emit as a singleton
-    e = _edges(spark, [(7, 7), (1, 2)])
-    assert _result(connected_components_twostar(e)) == _result(
-        connected_components(e)
+    pairs = [(7, 7), (1, 2)]
+    e = _edges(spark, pairs)
+    assert _result(connected_components_twostar(e)) == _union_find(
+        pairs
     ) == {(1, 1), (2, 1), (7, 7)}
 
 

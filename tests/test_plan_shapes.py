@@ -212,36 +212,6 @@ def test_twitter_dictionary_plan_depth_is_bounded(spark, sf_dir):
     ) <= 1
 
 
-def test_greedy_pandas_single_group_shuffle(spark):
-    # the Arrow fast path must keep the HOF twin's shuffle count: exactly
-    # one exchange (hash on the id cols) feeding FlatMapGroupsInPandas —
-    # a second exchange would mean the group key isn't reused
-    from thesaurus_based_ner_spark.operators.pseudo import greedy_bio_spans
-
-    spans = spark.createDataFrame(
-        [("d1", 0, 3, "G", 1.0), ("d1", 2, 5, "H", 2.0), ("d2", 1, 2, "G", 0.5)],
-        "doc_id string, m_start long, m_end long, label string, prob double",
-    )
-    df = greedy_bio_spans(spans, ["doc_id"], strategy="pandas")
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    ops = op_counts(plan)
-    assert "FlatMapGroupsInPandas" in plan
-    assert ops.get("Exchange", 0) == 1, ops
-    # and the strategy switch is honored: hof builds a pure-JVM plan
-    hof_plan = greedy_bio_spans(
-        spans, ["doc_id"], strategy="hof"
-    )._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    assert "FlatMapGroupsInPandas" not in hof_plan
-
-
 # ---------------------------------------------------------------------------
 # r9 optimization guards: score-then-distinct dedup shapes + skip-partial-agg
 # ---------------------------------------------------------------------------
@@ -280,19 +250,36 @@ def test_ngram_jaccard_no_postagg_size_joins(spark, sf_dir):
     assert "REPARTITION_BY_NUM" in plan, "pair agg must shuffle raw rows"
 
 
-def test_ngram_jaccard_keeps_exact_threshold_boundary(spark):
+@pytest.mark.parametrize(
+    "t, na, nb",
+    [
+        (0.2, 1, 5),
+        (0.4, 2, 5),
+        (0.45, 9, 20),
+        (0.5, 2, 4),
+        (0.55, 11, 20),
+        (0.65, 13, 20),
+        (0.8, 4, 5),
+        (0.9, 9, 10),
+    ],
+)
+def test_ngram_jaccard_keeps_exact_threshold_boundary(spark, t, na, nb):
     """The size-ratio prune must keep J == threshold exactly: doc A's
-    shingles ⊂ doc B's with |A|=2, |B|=4 → J = 2/(2+4-2) = 0.5 at
-    t=0.5 — the boundary pair (1+t)·min == t·(na+nb)."""
+    shingles ⊂ doc B's with |A|=na, |B|=nb → J = na/nb = t. A prune
+    written as (1+t)·min ≥ t·(na+nb) in doubles drops the pair at
+    t ∈ {0.2, 0.4, 0.45, 0.9}."""
     from thesaurus_based_ner_spark.operators import dedup
 
+    k = 3
+    words = [f"w{chr(ord('a') + i)}" for i in range(nb + k - 1)]
     df = spark.createDataFrame(
-        [(1, "a b c d"), (2, "a b c d e f")], "id long, text string"
+        [(1, " ".join(words[: na + k - 1])), (2, " ".join(words))],
+        "id long, text string",
     )
     rows = dedup.ngram_jaccard_pairs(
-        df, "id", "text", k=3, threshold=0.5
+        df, "id", "text", k=k, threshold=t
     ).collect()
-    assert len(rows) == 1 and rows[0]["jaccard"] == 0.5, rows
+    assert len(rows) == 1 and rows[0]["jaccard"] == t, rows
 
 
 def test_minhash_single_corpus_pass(spark, sf_dir):

@@ -212,8 +212,12 @@ def test_minhash_rejects_degenerate_band_config(spark):
 
 
 def test_greedy_bio_strategies_agree(spark):
-    # the Arrow fast path must be value-identical to the pure-JVM HOF
-    # formulation, including prob ties broken by (m_start, m_end, label)
+    # the JVM plan must be value-identical to a plain-Python greedy accept
+    # loop over the same rows, including prob ties broken by
+    # (m_start, m_end, label), NULL and NaN probs
+    import math
+    from collections import defaultdict
+
     from thesaurus_based_ner_spark.operators.pseudo import greedy_bio_spans
 
     rows = []
@@ -224,19 +228,34 @@ def test_greedy_bio_strategies_agree(spark):
             prob = float((i * 13 + d * 5) % 8)  # many ties
             label = ["G", "H", "nc-X"][i % 3]
             rows.append((f"d{d}", s, e, label, prob))
-        # one NULL prob per doc — both strategies must pin it to highest
-        # priority (explicit coalesce to -inf negated key)
+        # one NULL prob per doc — pinned to highest priority
         rows.append((f"d{d}", 100, 105, "G", None))
-        # one NaN prob per doc (ADVICE r4): without upstream NaN→NULL
-        # normalization the pandas path treats NaN like NULL (highest
-        # priority) while the HOF path's coalesce lets NaN sort as the
-        # largest double (lowest priority) — the strategies diverge
+        # one NaN prob per doc (ADVICE r4): normalized to NULL, so it is
+        # highest priority too rather than sorting as the largest double
         rows.append((f"d{d}", 103, 110, "H", float("nan")))
     spans = spark.createDataFrame(
         rows, "doc_id string, m_start long, m_end long, label string, prob double"
     )
-    a = greedy_bio_spans(spans, ["doc_id"], strategy="pandas")
-    b = greedy_bio_spans(spans, ["doc_id"], strategy="hof")
-    ka = sorted(map(tuple, a.collect()))
-    kb = sorted(map(tuple, b.collect()))
-    assert ka == kb and len(ka) > 0
+    out = greedy_bio_spans(spans, ["doc_id"])
+
+    by_doc = defaultdict(list)
+    for doc, s, e, label, prob in rows:
+        if not label.startswith("nc-"):
+            missing = prob is None or math.isnan(prob)
+            by_doc[doc].append((-math.inf if missing else -prob, s, e, label))
+    want = []
+    for doc, cand in by_doc.items():
+        acc = []
+        for _np, s, e, label in sorted(cand):
+            if not any(s < ae and as_ < e for as_, ae, _ in acc):
+                acc.append((s, e, label))
+        want += [(doc, s, e, label) for s, e, label in acc]
+
+    got = sorted(map(tuple, out.collect()))
+    assert got == sorted(want) and len(got) > 0
+    plan = out._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+    )
+    assert "FlatMapGroupsInPandas" not in plan

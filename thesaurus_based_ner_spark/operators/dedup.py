@@ -28,6 +28,7 @@ import hashlib
 from pyspark.sql import DataFrame, functions as F
 
 from thesaurus_based_ner_spark.functions.text import TOKEN_RE
+from thesaurus_based_ner_spark.operators.checkpoint import checkpoint
 
 
 def _tokens(text_col: str):
@@ -44,17 +45,6 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             F.min("id").alias("keep_id"),
         )
         .filter(F.col("n_docs") >= 2)
-    )
-
-
-def shingles_df(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3
-) -> DataFrame:
-    """Distinct k-token shingles per doc: (id, shingle)."""
-    toks = _tokens(text_col)
-    return (
-        df.select(F.col(id_col).alias("id"), toks.alias("__toks"))
-        .select("id", F.explode(_shingle_col(k)).alias("shingle"))
     )
 
 
@@ -79,10 +69,13 @@ def ngram_jaccard_pairs(
     #    ride the pair rows as extra GROUPING keys (functionally dependent
     #    on the pair, so the groups are unchanged).
     # 2. Size-ratio prune inside the join (exact, no recall loss):
-    #    J_max = min(na,nb)/(na+nb-min(na,nb)), so a pair can only reach
-    #    J ≥ t when (1+t)·min(na,nb) ≥ t·(na+nb); ~20% of join rows die
-    #    before the aggregation (86M/114M distinct pairs survive at
-    #    t=0.5). Equality kept (J_max = t passes the ≥ filter).
+    #    J ≤ J_max = m/(na+nb-m) with m = min(na,nb), so a pair can only
+    #    reach J ≥ t when J_max ≥ t; ~20% of join rows die before the
+    #    aggregation (86M/114M distinct pairs survive at t=0.5). J_max is
+    #    computed with the SAME double division as the final filter, so
+    #    a pair whose intersection is m passes the prune exactly when it
+    #    passes the filter (no J == t pair is lost to rounding), and a
+    #    smaller intersection gives a J no larger than J_max.
     # 3. The pair count's map-side partial aggregation is USELESS here
     #    (127M rows → 114M groups, reduction 1.1×) but builds multi-
     #    million-entry hash tables per task; an explicit repartition on
@@ -100,10 +93,7 @@ def ngram_jaccard_pairs(
     # at sf1.0. From the stored arrays, each join side re-derives
     # size+explode in cheap codegen (no regexp, no HOF).
     pre = toks.select("id", _shingle_col(k).alias("__shset"))
-    try:
-        pre = pre.localCheckpoint(eager=True)
-    except Exception:
-        pass
+    pre = checkpoint(pre)
     sh = pre.select(
         "id",
         F.size("__shset").alias("n"),
@@ -111,10 +101,8 @@ def ngram_jaccard_pairs(
     )
     a = sh.alias("a")
     b = sh.alias("b")
-    t = float(threshold)
-    prune = (F.lit(1.0 + t) * F.least(F.col("a.n"), F.col("b.n"))) >= (
-        F.lit(t) * (F.col("a.n") + F.col("b.n"))
-    )
+    m = F.least(F.col("a.n"), F.col("b.n"))
+    prune = m / (F.col("a.n") + F.col("b.n") - m) >= threshold
     pairs = (
         a.join(
             b,
@@ -159,33 +147,6 @@ def _minhash_coeffs(n_hashes: int, seed: int = 7) -> list[tuple[int, int]]:
     return out
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3, n_hashes: int = 32
-) -> DataFrame:
-    """(id, sig array<bigint>) MinHash signatures, fully JVM-side.
-
-    ONE xxhash64 per shingle, then n_hashes universal-hash derivations
-    h_i(x) = (a_i·h + b_i) mod 2^31-1 — multiply-adds inside whole-stage
-    codegen instead of n_hashes full string hashes; min per doc per i as
-    n_hashes aggregate expressions over the exploded shingle table (one
-    shuffle, no Python). Values stay < 2^62 so ANSI overflow never trips.
-    """
-    sh = shingles_df(df, id_col, text_col, k).withColumn(
-        "__h", F.pmod(F.xxhash64("shingle"), F.lit(_MERSENNE31))
-    )
-    coeffs = _minhash_coeffs(n_hashes)
-    aggs = [
-        F.min(
-            F.pmod(F.col("__h") * F.lit(a) + F.lit(b), F.lit(_MERSENNE31))
-        ).alias(f"h{i}")
-        for i, (a, b) in enumerate(coeffs)
-    ]
-    sig = sh.groupBy("id").agg(*aggs)
-    return sig.select(
-        "id", F.array(*[F.col(f"h{i}") for i in range(n_hashes)]).alias("sig")
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -213,20 +174,20 @@ def minhash_lsh_pairs(
             f"bands ({bands}) must divide n_hashes ({n_hashes})"
         )
     rows = n_hashes // bands
-    # ONE corpus pass (r9): the per-doc distinct shingle ARRAYS feed both
-    # the minhash signatures (exploded below) and the exact-Jaccard
-    # verification sets — previously the corpus was tokenized + shingled
-    # twice (minhash_signatures' pass plus the `sets` pass).
+    # ONE corpus pass: the per-doc distinct shingle ARRAYS feed both the
+    # minhash signatures (exploded below) and the exact-Jaccard
+    # verification sets, so the corpus is tokenized + shingled once.
     pre = df.select(
         F.col(id_col).alias("id"), _tokens(text_col).alias("__toks")
     ).select("id", _shingle_col(k).alias("shset"))
-    try:
-        pre = pre.localCheckpoint(eager=True)
-    except Exception:
-        pass
+    pre = checkpoint(pre)
     sh = pre.select("id", F.explode("shset").alias("shingle")).withColumn(
         "__h", F.pmod(F.xxhash64("shingle"), F.lit(_MERSENNE31))
     )
+    # ONE xxhash64 per shingle, then n_hashes universal-hash derivations
+    # h_i(x) = (a_i·h + b_i) mod 2^31-1 — multiply-adds inside whole-stage
+    # codegen, min per doc per i as aggregate expressions (one shuffle,
+    # no Python). Values stay < 2^62 so ANSI overflow never trips.
     coeffs = _minhash_coeffs(n_hashes)
     aggs = [
         F.min(
@@ -246,10 +207,7 @@ def minhash_lsh_pairs(
     # frame below is SELF-joined, so without this the whole shingle +
     # minhash subtree (the expensive corpus pass) executes twice (same
     # pattern as simhash_pairs' checkpoint of h)
-    try:
-        sig = sig.localCheckpoint(eager=True)
-    except Exception:
-        pass  # fall back to recompute-per-reference
+    sig = checkpoint(sig)
     band_cols = F.explode(
         F.array(
             *[
@@ -367,10 +325,7 @@ def simhash_pairs(
     # are GC-reclaimed with the frame, cached plans pin executor storage
     # for the session
     h = simhash_table(df, id_col, text_col, k)
-    try:
-        h = h.localCheckpoint(eager=True)
-    except Exception:
-        pass  # fall back to recompute-per-reference
+    h = checkpoint(h)
     blocks = None
     for j in range(4):
         blk = h.select(
@@ -447,10 +402,7 @@ def embedding_neardup_pairs(
         buckets = b if buckets is None else buckets.unionByName(b)
     # self-joined below: materialize so the hyperplane projections (384
     # multiply-adds per row per table) run once, not once per side
-    try:
-        buckets = buckets.localCheckpoint(eager=True)
-    except Exception:
-        pass
+    buckets = checkpoint(buckets)
     a = buckets.alias("a")
     b = buckets.alias("b")
     from thesaurus_based_ner_spark.operators.simsearch import _cos

@@ -10,14 +10,17 @@ Reference parity:
                         (/root/reference/src/dataset/utils.py:138-173,343-360)
 - resolve_chains      ← redirect transitive closure until fixpoint
                         (/root/reference/src/kb_loader/db_pedia.py:55-71)
-- connected_components← UnionFind (/root/reference/src/utils/utils.py:17-38),
+- connected_components_twostar
+                      ← UnionFind (reference src/utils/utils.py:17-38),
                         lifted from per-sentence to corpus scale via
-                        min-label propagation (large-star/small-star shape)
+                        alternating large-star / small-star rounds
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from thesaurus_based_ner_spark.operators.checkpoint import checkpoint, fork
 
 
 _BAD_RULE = "org.apache.spark.sql.catalyst.optimizer.RemoveRedundantAliases"
@@ -38,37 +41,6 @@ def _ensure_safe_optimizer(spark) -> None:
         )
 
 
-def _fork(df: DataFrame) -> DataFrame:
-    """Fresh-attribute copy of a frame (double alias projection).
-
-    Spark 4.1's checkpoint/cache plan canonicalization intermittently
-    throws NoSuchElementException when one checkpointed frame is
-    referenced several times in a plan (self-join + anti-join + union) —
-    the references share attribute ids. Re-aliasing through temp names
-    allocates new ids per reference, which reliably avoids it.
-    """
-    cols = df.columns
-    tmp = [f"__fork_{c}" for c in cols]
-    return df.toDF(*tmp).select(
-        *[F.col(t).alias(c) for t, c in zip(tmp, cols)]
-    )
-
-
-def _checkpoint(df: DataFrame) -> DataFrame:
-    try:
-        return df.localCheckpoint(eager=True)
-    except Exception:
-        # Spark 4.1 localCheckpoint intermittently throws
-        # NoSuchElementException on plans that self-join an
-        # already-checkpointed frame (attribute-id collision in the
-        # checkpoint plan copy; execution itself is fine). Fall back to
-        # cache + materialize — no lineage cut, but these loops are
-        # depth-bounded so plan growth stays modest.
-        df = df.cache()
-        df.count()
-        return df
-
-
 def ancestor_closure(
     edges: DataFrame,
     child_col: str = "child",
@@ -84,7 +56,7 @@ def ancestor_closure(
     get_ascendant_tuis which includes the node itself (utils.py:343-360).
     """
     _ensure_safe_optimizer(edges.sparkSession)
-    e = _checkpoint(
+    e = checkpoint(
         edges.select(
             F.col(child_col).alias("node"), F.col(parent_col).alias("ancestor")
         ).distinct()
@@ -98,20 +70,20 @@ def ancestor_closure(
     frontier = deltas[0]
 
     def _closure_so_far() -> DataFrame:
-        out = _fork(deltas[0])
+        out = fork(deltas[0])
         for d in deltas[1:]:
-            out = out.unionByName(_fork(d))
+            out = out.unionByName(fork(d))
         return out
 
     for _ in range(max_depth):
         nxt = (
-            _fork(frontier).alias("f")
-            .join(_fork(e).alias("e"), F.col("f.ancestor") == F.col("e.node"))
+            fork(frontier).alias("f")
+            .join(fork(e).alias("e"), F.col("f.ancestor") == F.col("e.node"))
             .select(F.col("f.node"), F.col("e.ancestor"))
             .distinct()
             .join(_closure_so_far(), ["node", "ancestor"], "left_anti")
         )
-        nxt = _checkpoint(nxt)
+        nxt = checkpoint(nxt)
         # 1-row count aggregate, consistent with the signature convergence
         # tests elsewhere — no isEmpty in any iterative loop
         if nxt.agg(F.count("*").alias("n")).collect()[0]["n"] == 0:
@@ -121,8 +93,8 @@ def ancestor_closure(
     closure = _closure_so_far()
     if include_self:
         nodes = (
-            _fork(e).select("node")
-            .union(_fork(e).select("ancestor"))
+            fork(e).select("node")
+            .union(fork(e).select("ancestor"))
             .distinct()
             .select("node", F.col("node").alias("ancestor"))
         )
@@ -149,24 +121,24 @@ def descendants_bfs(
     roots: 1-column frame of start nodes. Returns 1-column `node`.
     """
     _ensure_safe_optimizer(edges.sparkSession)
-    e = _checkpoint(
+    e = checkpoint(
         edges.select(
             F.col(parent_col).alias("parent"), F.col(child_col).alias("child")
         ).distinct()
     )
-    seen = [_checkpoint(roots.toDF("node").distinct())]
+    seen = [checkpoint(roots.toDF("node").distinct())]
     frontier = seen[0]
 
     def _seen() -> DataFrame:
-        out = _fork(seen[0])
+        out = fork(seen[0])
         for d in seen[1:]:
-            out = out.unionByName(_fork(d))
+            out = out.unionByName(fork(d))
         return out
 
     def _expand(cur: DataFrame) -> DataFrame:
-        return _checkpoint(
-            _fork(cur).alias("f")
-            .join(_fork(e).alias("e"), F.col("f.node") == F.col("e.parent"))
+        return checkpoint(
+            fork(cur).alias("f")
+            .join(fork(e).alias("e"), F.col("f.node") == F.col("e.parent"))
             .select(F.col("e.child").alias("node"))
             .distinct()
             .join(_seen(), ["node"], "left_anti")
@@ -228,7 +200,7 @@ def resolve_chains(
             .select("src", F.coalesce("__d", "root").alias("root"),
                     F.col("__s").isNotNull().alias("__moved"))
         )
-        stepped = _checkpoint(stepped)
+        stepped = checkpoint(stepped)
         # 1-row signature aggregate (same trick as twostar CC) — the
         # convergence decision costs one tiny collect, never a filtered
         # materialization
@@ -250,9 +222,8 @@ def connected_components_twostar(
     """(node, component) via alternating large-star / small-star rounds
     (Kiveris et al., "Connected Components in MapReduce and Beyond").
 
-    Converges in O(log n) rounds on ANY graph shape — the scale-safe
-    default for web graphs with long chains or unknown diameter, vs the
-    O(diameter) min-label propagation below. Each round is two
+    Converges in O(log n) rounds on ANY graph shape, so web graphs with
+    long chains or unknown diameter stay cheap. Each round is two
     groupBy-min + join shuffles, all key-partitioned; convergence is
     detected from a 1-row signature aggregate (count + xor of row hashes),
     not a driver anti-join.
@@ -273,7 +244,7 @@ def connected_components_twostar(
     cur = e.select(
         F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
     ).distinct()
-    cur = _checkpoint(cur)
+    cur = checkpoint(cur)
 
     def _sig(df: DataFrame) -> tuple:
         row = df.agg(
@@ -300,7 +271,7 @@ def connected_components_twostar(
         cur = (
             large.filter(F.col("u") != F.col("v")).distinct()
         )
-        cur = _checkpoint(cur)
+        cur = checkpoint(cur)
         sym = cur.union(cur.select(F.col("v").alias("u"), F.col("u").alias("v")))
         mn = _min_nbr(sym)
         # small-star: (v, m(u)) for v ∈ N(u) ∪ {u}, v ≤ u
@@ -311,7 +282,7 @@ def connected_components_twostar(
             .union(mn.select(F.col("u"), F.col("m").alias("v")))
         )
         cur = small.filter(F.col("u") != F.col("v")).distinct()
-        cur = _checkpoint(cur)
+        cur = checkpoint(cur)
         new_sig = _sig(cur)
         if new_sig == sig:
             break
@@ -320,7 +291,7 @@ def connected_components_twostar(
     membership = cur.select(F.col("u").alias("node"), F.col("v").alias("component"))
     # singletons come from the ORIGINAL edge list: a node appearing only
     # in self-loops was filtered out of `e` and must still be emitted as
-    # its own component (connected_components keeps it — same contract)
+    # its own component
     roots = (
         edges.select(F.col(a_col).alias("u"))
         .union(edges.select(F.col(b_col).alias("u")))
@@ -329,66 +300,6 @@ def connected_components_twostar(
         .select(F.col("u").alias("node"), F.col("u").alias("component"))
     )
     return membership.unionByName(roots)
-
-
-def connected_components(
-    edges: DataFrame,
-    a_col: str = "a",
-    b_col: str = "b",
-    max_iters: int = 50,
-) -> DataFrame:
-    """(node, component) with component = min node id in the component.
-
-    Min-label propagation over symmetrized edges; each round one shuffle
-    join + aggregate; converges in O(component diameter) rounds (our
-    canonicalization graphs are shallow: shared-surface stars). For
-    web-scale graphs / unknown diameter use connected_components_twostar —
-    same contract, O(log n) rounds.
-    """
-    sym = (
-        edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .union(edges.select(F.col(b_col).alias("u"), F.col(a_col).alias("v")))
-        .distinct()
-    )
-    sym = _checkpoint(sym)
-    labels = (
-        sym.select("u").distinct().select("u", F.col("u").alias("component"))
-    )
-    labels = _checkpoint(labels)
-
-    def _sig(df: DataFrame) -> tuple:
-        # 1-row signature (count + xor of row hashes), the same
-        # convergence test connected_components_twostar uses — no driver
-        # isEmpty / filtered materialization per round
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.expr("bit_xor(xxhash64(u, component))").alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    sig = _sig(labels)
-    for _ in range(max_iters):
-        neighbor_min = (
-            sym.join(labels.withColumnRenamed("u", "v2"), sym["v"] == F.col("v2"))
-            .groupBy("u")
-            .agg(F.min("component").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, "u", "left")
-            .select(
-                "u",
-                F.least(
-                    F.col("component"), F.coalesce("nmin", F.col("component"))
-                ).alias("component"),
-            )
-        )
-        new_labels = _checkpoint(new_labels)
-        new_sig = _sig(new_labels)
-        labels = new_labels
-        if new_sig == sig:
-            break
-        sig = new_sig
-    return labels.select(F.col("u").alias("node"), "component")
 
 
 def transitive_reduction(
@@ -430,7 +341,7 @@ def pagerank(
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge table — the
     entity-importance primitive for canonical-entity selection when
-    canonicalization (connected_components) leaves a cluster with several
+    canonicalization (two-star CC) leaves a cluster with several
     candidate representatives (reference picks by redirect target only,
     /root/reference/src/kb_loader/db_pedia.py:55-71; rank generalizes it).
 
@@ -447,38 +358,38 @@ def pagerank(
     """
     spark = edges.sparkSession
     _ensure_safe_optimizer(spark)
-    e = _checkpoint(
+    e = checkpoint(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .distinct()
     )
-    nodes = _checkpoint(
-        _fork(e).select(F.col("src").alias("node"))
-        .union(_fork(e).select("dst"))
+    nodes = checkpoint(
+        fork(e).select(F.col("src").alias("node"))
+        .union(fork(e).select("dst"))
         .distinct()
     )
-    out_deg = _fork(e).groupBy("src").agg(F.count("*").alias("deg"))
-    deg_edges = _checkpoint(_fork(e).join(out_deg, "src"))
-    n_df = _fork(nodes).agg(F.count("*").cast("double").alias("n"))
+    out_deg = fork(e).groupBy("src").agg(F.count("*").alias("deg"))
+    deg_edges = checkpoint(fork(e).join(out_deg, "src"))
+    n_df = fork(nodes).agg(F.count("*").cast("double").alias("n"))
     ranks = (
-        _fork(nodes)
+        fork(nodes)
         .crossJoin(F.broadcast(n_df))
         .select("node", (F.lit(1.0) / F.col("n")).alias("rank"))
     )
     for _ in range(iters):
-        r = _fork(ranks)
+        r = fork(ranks)
         contribs = (
-            r.join(_fork(deg_edges), r.node == F.col("src"))
+            r.join(fork(deg_edges), r.node == F.col("src"))
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum(F.col("rank") / F.col("deg")).alias("contrib"))
         )
         dangling = (
-            _fork(ranks)
-            .join(_fork(deg_edges).select("src").distinct(),
+            fork(ranks)
+            .join(fork(deg_edges).select("src").distinct(),
                   F.col("node") == F.col("src"), "left_anti")
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dmass"))
         )
-        ranks = _checkpoint(
-            _fork(nodes)
+        ranks = checkpoint(
+            fork(nodes)
             .join(contribs, "node", "left")
             .crossJoin(F.broadcast(dangling))
             .crossJoin(F.broadcast(n_df))
@@ -495,7 +406,7 @@ def pagerank(
             )
         )
     return (
-        _fork(ranks)
+        fork(ranks)
         .crossJoin(F.broadcast(n_df))
         .select("node", F.round(F.col("rank") * F.col("n"), 6).alias("rank"))
     )

@@ -142,9 +142,9 @@ def dictionary_set_algebra(
     the base frame 3^N times; localCheckpoint after every step bounds it
     to one pass over the (dim-sized) dictionary per subtraction.
     """
-    from thesaurus_based_ner_spark.operators.graph import _checkpoint
+    from thesaurus_based_ner_spark.operators.checkpoint import checkpoint
 
-    cur = _checkpoint(cat_terms.select("cat", "term").distinct())
+    cur = checkpoint(cat_terms.select("cat", "term").distinct())
     for target, remove in subtract:
         removed = (
             cur.filter(F.col("cat") == target)
@@ -154,7 +154,7 @@ def dictionary_set_algebra(
                 "left_anti",
             )
         )
-        cur = _checkpoint(
+        cur = checkpoint(
             cur.filter(F.col("cat") != target).unionByName(removed)
         )
     return (

@@ -186,7 +186,7 @@ def _hash_matches(
         base = base.where(F.lower("tok").isin(*first_tokens))
     structs = []
     for n in sorted(lens):
-        elems = [F.col("tokens").getItem(F.col("pos") + F.lit(i)) for i in range(n)]
+        elems = [F.col("tokens")[F.col("pos") + F.lit(i)] for i in range(n)]
         valid = (F.col("pos") + n) <= F.size("tokens")
         structs.append(
             F.when(

@@ -142,45 +142,26 @@ def greedy_bio_spans(
     spans: DataFrame,
     id_cols: list[str],
     prob_col: str = "prob",
-    strategy: str = "hof",
 ) -> DataFrame:
     """W3: greedy probability-ordered span selection (reference
     load_ner_tags, utils/typer_to_bio.py:17-32): visit spans by prob desc,
     accept a span iff no already-accepted span overlaps it; nc-* spans are
     never accepted.
 
-    The accept decision is chain-sequential per sentence/doc, so both
-    strategies group on the id and run the chain inside the group; ties on
-    prob break by (m_start, m_end, label) for determinism. Same one
-    id-keyed shuffle either way:
-
-    - ``hof`` (default): the pure-JVM-plan formulation
-      (array_sort(collect_list) + aggregate/exists) — no Python workers
-      in the job at all. aggregate()/exists() lambdas are interpreted
-      expression trees (never codegen'd), but the accept chain is
-      O(k·|accepted|) per group in EITHER engine, and per-sentence/doc
-      NER span groups are small (k ≈ tens), where the measured decider
-      is applyInPandas's ~1.5 ms per-group Arrow/pandas overhead:
-      5000 groups × k=50 run 0.8 s hof vs 8.2 s pandas on local[32].
-    - ``pandas``: applyInPandas with a per-group Python loop over the
-      prob-sorted spans; same single id-keyed shuffle, equality-pinned
-      twin (tests assert agreement). Only wins on rare huge groups
-      (k ≈ 2000: 1.1 s vs 1.9 s) where the interpreted O(k²) chain
-      dominates the per-group overhead — callers with thousand-span
-      groups can opt in.
+    The accept decision is chain-sequential per sentence/doc, so the plan
+    groups on the id (one id-keyed shuffle) and runs the chain inside the
+    group as a pure-JVM expression (array_sort(collect_list) +
+    aggregate/exists) — no Python workers in the job. Ties on prob break
+    by (m_start, m_end, label) ascending; a NULL or NaN prob has the
+    highest priority.
     """
-    # Normalize NaN probs to NULL BEFORE the strategy split (ADVICE r4):
-    # Arrow maps both NULL and NaN to pandas NaN, so the pandas path's
-    # fillna(-inf) would promote NaN to highest priority, while the HOF
-    # path's coalesce only catches NULL — there a NaN survives and sorts
-    # as the LARGEST double (lowest priority after negation). Folding NaN
-    # into the documented NULL behavior keeps the twins exactly equal.
+    # NaN → NULL first: the sort key's coalesce only catches NULL, and a
+    # NaN left in place would sort as the LARGEST double (lowest priority
+    # after negation) instead of the documented NULL behavior
     _p = F.col(prob_col).cast("double")
     spans = spans.withColumn(
         prob_col, F.when(F.isnan(_p), F.lit(None)).otherwise(_p)
     )
-    if strategy == "pandas":
-        return _greedy_spans_pandas(spans, id_cols, prob_col)
     pos = spans.filter(~F.col("label").startswith("nc-"))
     # ascending sort on (-p, s, e, l) = p DESC, then m_start/m_end/label
     # ASC — reverse(array_sort(...)) would flip the LABEL tie-break to
@@ -189,9 +170,8 @@ def greedy_bio_spans(
         F.array_sort(
             F.collect_list(
                 F.struct(
-                    # NULL prob pinned to highest priority by construction
-                    # (not by struct-null ordering) so the pandas twin can
-                    # reproduce it exactly
+                    # NULL prob pinned to highest priority by construction,
+                    # not by struct-null ordering
                     F.coalesce(
                         -F.col(prob_col).cast("double"),
                         F.lit(float("-inf")),
@@ -233,52 +213,6 @@ def greedy_bio_spans(
             F.col("__a.l").alias("label"),
         )
     )
-
-
-def _greedy_spans_pandas(
-    spans: DataFrame, id_cols: list[str], prob_col: str
-) -> DataFrame:
-    """Arrow-batched twin of the HOF formulation: one groupBy(id) shuffle,
-    then the greedy accept chain as a plain loop per group. Output schema
-    and values are identical to strategy='hof' (pinned by
-    tests/test_round2_ops.py::test_greedy_bio_strategies_agree)."""
-    import pandas as pd
-
-    pos = spans.filter(~F.col("label").startswith("nc-")).select(
-        *id_cols,
-        F.col("m_start").cast("bigint").alias("m_start"),
-        F.col("m_end").cast("bigint").alias("m_end"),
-        F.col("label"),
-        F.col(prob_col).cast("double").alias("__p"),
-    )
-    out_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in pos.schema.fields
-        if f.name != "__p"
-    )
-
-    def accept(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf.iloc[0][id_cols]
-        # NULL prob → -inf negated key = highest priority, matching the
-        # HOF path's explicit coalesce
-        cand = sorted(
-            zip(
-                (-pdf["__p"]).fillna(float("-inf")),
-                pdf["m_start"],
-                pdf["m_end"],
-                pdf["label"],
-            )
-        )
-        acc: list[tuple[int, int, str]] = []
-        for _np, s, e, l in cand:
-            if not any(s < ae and as_ < e for as_, ae, _ in acc):
-                acc.append((s, e, l))
-        out = pd.DataFrame(acc, columns=["m_start", "m_end", "label"])
-        for c in id_cols:
-            out[c] = ids[c]
-        return out[[*id_cols, "m_start", "m_end", "label"]]
-
-    return pos.groupBy(*id_cols).applyInPandas(accept, schema=out_schema)
 
 
 def drop_unknown_type(spans: DataFrame, label_col: str = "label") -> DataFrame:

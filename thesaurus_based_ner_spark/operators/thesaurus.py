@@ -119,12 +119,12 @@ def expand_disambiguation(
     term2entity: (term, entity); disamb: (src, dst) one-to-many edges.
     Output: (term, entity) with every src replaced by its leaf targets.
     """
-    from thesaurus_based_ner_spark.operators.graph import _checkpoint
+    from thesaurus_based_ner_spark.operators.checkpoint import checkpoint
 
     srcs = disamb.select(F.col("src").alias("entity")).distinct()
     cur = term2entity
     for _ in range(max_depth):
-        ambiguous = _checkpoint(cur.join(srcs, "entity", "left_semi"))
+        ambiguous = checkpoint(cur.join(srcs, "entity", "left_semi"))
         # 1-row count aggregate (checkpointed input, so the expansion
         # below reuses the materialization) — no isEmpty in the loop
         if ambiguous.agg(F.count("*").alias("n")).collect()[0]["n"] == 0:
@@ -134,7 +134,7 @@ def expand_disambiguation(
             ambiguous.join(disamb, ambiguous["entity"] == disamb["src"])
             .select("term", F.col("dst").alias("entity"))
         )
-        cur = _checkpoint(resolved.unionByName(expanded).distinct())
+        cur = checkpoint(resolved.unionByName(expanded).distinct())
     return cur
 
 

@@ -320,10 +320,10 @@ def order_window_overlaps(spark, sf_dir):
     o = T(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate"
     )
-    # spread the probe side: customer is broadcast-joined, so the whole
-    # pair expansion + count runs in the probe stage, which a 1-2
-    # row-group orders scan pins to 1-2 cores (r9). The build side stays
-    # unspread — it is hashed once either way.
+    # orders⋈orders self-join: spread the probe side `a`. The unspread
+    # `b` side is broadcast, so the whole pair expansion + count runs in
+    # the `a` stage, which a 1-2 row-group orders scan would pin to 1-2
+    # cores (r9). `b` stays unspread — it is hashed once either way.
     a = spread(o).alias("a")
     b = o.alias("b")
     return (

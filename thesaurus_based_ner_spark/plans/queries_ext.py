@@ -149,7 +149,7 @@ def _span_diff_frames(spark, sf_dir) -> tuple[DataFrame, DataFrame]:
     cluster this is exactly the stage you'd checkpoint: spans are ~100×
     smaller than the token stream.
     """
-    from thesaurus_based_ner_spark.operators.graph import _checkpoint, _fork
+    from thesaurus_based_ner_spark.operators.checkpoint import checkpoint, fork
 
     toks = _doc_tokens(spark, sf_dir)
     pos = toks.select("doc_id", F.posexplode("tokens").alias("pos", "tok"))
@@ -191,12 +191,12 @@ def _span_diff_frames(spark, sf_dir) -> tuple[DataFrame, DataFrame]:
         )
         .drop("grp")
     )
-    runs = _checkpoint(runs)
-    # _fork: fresh attribute ids per side — the diff plan self-joins the
+    runs = checkpoint(runs)
+    # fork: fresh attribute ids per side — the diff plan self-joins the
     # checkpointed frame (gold × pred anti-joins), and Spark 4.1's
     # checkpoint plan copy intermittently trips on shared expr ids
-    gold = _fork(runs).filter(F.col("side") == "gold").drop("side")
-    pred = _fork(runs).filter(F.col("side") == "pred").drop("side")
+    gold = fork(runs).filter(F.col("side") == "gold").drop("side")
+    pred = fork(runs).filter(F.col("side") == "pred").drop("side")
     return gold, pred
 
 
