@@ -7,10 +7,10 @@ instrumentation the optimization guide (§1) asks for:
       (rep timing matches bench.py: fn(spark, SF_DIR).count(), steady =
       min) plus a third noop-sink rep that computes every column.
   python bench_extra.py plan  Q1 [Q2 ...]   — .explain("formatted") to
-      plans/r09/<query>_<tag>.txt (tag from $PLAN_TAG, default "now").
+      plans/<query>_<tag>.txt (tag from $PLAN_TAG, default "now").
 
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0 — the driver's r8
-measurement scale), SPARK_GRAFT_CPUS (default 32), PLAN_TAG.
+Env: SPARK_GRAFT_SF_DIR (default: bench.py's SF_DIR, the sf0.1 tables),
+SPARK_GRAFT_CPUS (read by session.get_spark; unset = all cores), PLAN_TAG.
 """
 
 from __future__ import annotations
@@ -22,11 +22,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-PLAN_DIR = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "plans", "r09"
-)
+from bench import SF_DIR  # noqa: E402
+
+PLAN_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans")
 
 
 def _spark():
@@ -36,7 +34,7 @@ def _spark():
         os.environ.get("SPARK_GRAFT_BENCH_TMP", "/dev/shm"), "spark-local"
     )
     os.makedirs(local_dir, exist_ok=True)
-    return get_spark("bench_extra", cpus=CPUS, extra_conf={
+    return get_spark("bench_extra", cpus=None, extra_conf={
         "spark.local.dir": local_dir,
     })
 
@@ -69,7 +67,8 @@ def cmd_time(names: list[str]) -> None:
         spark.sparkContext.setJobDescription(None)
         out[name] = {"first": walls[0], "steady": min(walls), "noop": noop}
         print(json.dumps({name: out[name]}), flush=True)
-    print(json.dumps({"sf_dir": SF_DIR, "cpus": CPUS, "walls": out}))
+    cpus = spark.sparkContext.defaultParallelism
+    print(json.dumps({"sf_dir": SF_DIR, "cpus": cpus, "walls": out}))
 
 
 def cmd_plan(names: list[str]) -> None:

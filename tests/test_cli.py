@@ -7,8 +7,8 @@ from thesaurus_based_ner_spark.cli import build_parser, main
 
 def test_parser_wiring():
     p = build_parser()
-    a = p.parse_args(["pipeline", "--output", "/tmp/x", "--strategy", "trie"])
-    assert a.cmd == "pipeline" and a.strategy == "trie" and a.checkpoint == "minimal"
+    a = p.parse_args(["pipeline", "--output", "/tmp/x"])
+    assert a.cmd == "pipeline"
     a = p.parse_args(["query", "--name", "mention_spans", "--sf-dir", "/d"])
     assert a.cmd == "query"
 

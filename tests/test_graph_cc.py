@@ -7,6 +7,7 @@ the long chain that makes O(diameter) label propagation pathological.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from thesaurus_based_ner_spark.operators.graph import connected_components_twostar
@@ -229,29 +230,43 @@ def test_surface_star_edges_salted_plan_shape(spark):
     assert plan.count("Window") >= 2
 
 
-def test_descendants_bfs_fails_loud_past_max_depth(spark):
+def _descendants(chain, max_depth):
+    from thesaurus_based_ner_spark.operators.graph import descendants_bfs
+
+    roots = chain.sparkSession.createDataFrame([("n0",)], "node string")
+    return descendants_bfs(chain, roots, "parent", "child", max_depth=max_depth)
+
+
+def _ancestors(chain, max_depth):
+    from thesaurus_based_ner_spark.operators.graph import ancestor_closure
+
+    return ancestor_closure(chain, "child", "parent", max_depth=max_depth)
+
+
+# (operator, rows of the full result, rounds the 6-edge chain needs):
+# descendants_bfs finds n1..n6 across 6 frontier expansions;
+# ancestor_closure starts from the edges themselves, so pair lengths 2..6
+# take 5 rounds (21 pairs + 7 self pairs)
+@pytest.mark.parametrize(
+    "op, full, exact",
+    [(_descendants, 7, 6), (_ancestors, 28, 5)],
+    ids=["descendants_bfs", "ancestor_closure"],
+)
+def test_descendants_bfs_fails_loud_past_max_depth(spark, op, full, exact):
     """ADVICE r4: a hierarchy deeper than max_depth must raise, not return
     a silently truncated closure (reference get_descendants_cuis iterates
     until the frontier empties)."""
-    import pytest
-
-    from thesaurus_based_ner_spark.operators.graph import descendants_bfs
-
     chain = spark.createDataFrame(
         [(f"n{i}", f"n{i + 1}") for i in range(6)], "parent string, child string"
     )
-    roots = spark.createDataFrame([("n0",)], "node string")
     # deep enough: converges
-    ok = descendants_bfs(chain, roots, "parent", "child", max_depth=10)
-    assert ok.count() == 7
+    assert op(chain, 10).count() == full
     # too shallow: refuses rather than truncating
     with pytest.raises(RuntimeError, match="max_depth"):
-        descendants_bfs(chain, roots, "parent", "child", max_depth=3)
+        op(chain, 3)
     # ADVICE r5: depth EXACTLY max_depth discovers the last layer on the
-    # final iteration — the closure is complete, so it must converge (the
-    # chain has 6 edges: n1..n6 found across 6 frontier expansions)
-    exact = descendants_bfs(chain, roots, "parent", "child", max_depth=6)
-    assert exact.count() == 7
+    # final round — the closure is complete, so it must converge
+    assert op(chain, exact).count() == full
 
 
 def test_choose_canonical_salt_uniform_stays_unsalted(spark):

@@ -76,3 +76,16 @@ def test_incremental_kg_replaces_recrawled_url(spark, tmp_path):
         (F.col("pred") == "mentionedIn") & (F.col("obj") != target_url)
     ).count()
     assert others_after == others_before
+
+    # a later drain of disjoint new pages adds their mentionedIn triples
+    # and leaves the pages already in the store alone
+    before = {r.obj for r in t2.filter(F.col("pred") == "mentionedIn").collect()}
+    new_pages = synth_webtext(spark, 30).filter(
+        (F.col("lang") == "en")
+        & (F.split(F.col("url"), "/").getItem(4).cast("int") >= 20)
+    )
+    new_urls = {r.url for r in new_pages.select("url").collect()}
+    new_pages.write.mode("append").parquet(wt_dir)
+    t3 = _run(spark, tmp_path)
+    after = {r.obj for r in t3.filter(F.col("pred") == "mentionedIn").collect()}
+    assert new_urls and after == before | new_urls

@@ -47,7 +47,6 @@ def triples(spark, catalog):
         anchor,
         redirects,
         corpus_fingerprint=f"synth:{N_DOCS}",
-        checkpoint="full",
     ).cache()
 
 
@@ -120,8 +119,10 @@ def test_extraction_byte_identity_counter(spark):
 
 def test_lineage_written(catalog, triples):
     lin = catalog.lineage()
+    # the extract → sentencize → match prefix is fused: no corpus-sized
+    # intermediate (extracted text, tokenized sentences) is ever written
     stages = {m["stage"] for m in lin}
-    assert {"extract", "sentencize", "match", "link", "canonicalize", "materialize"} <= stages
+    assert stages == {"match", "candidates", "canonicalize", "link", "materialize"}
     for m in lin:
         assert m["rows_out"] == sum(p["rows"] for p in m["partitions"])
 
@@ -138,10 +139,9 @@ def test_resume_skips_finished_stages(spark, catalog, triples):
     t2 = run_pipeline(
         spark, catalog, webtext, TERM2LABEL, anchor, redirects,
         corpus_fingerprint=f"synth:{N_DOCS}",
-        checkpoint="full",
     )
     after = {m["table"]: m["written_at"] for m in catalog.lineage()}
-    for tbl in ["extracted", "sentences", "mentions", "linked", "canonical"]:
+    for tbl in ["mentions", "linked", "candidates", "canonical"]:
         assert after[tbl] == before[tbl], f"{tbl} was rebuilt on resume"
     assert after["triples"] != before.get("triples")
     assert t2.count() == triples.count()
@@ -151,27 +151,6 @@ def test_fingerprint_invalidation(spark, catalog):
     """Changing the thesaurus fingerprint rebuilds downstream stages."""
     assert not catalog.exists("mentions", fingerprint="other")
     assert catalog.exists("mentions")
-
-
-def test_minimal_checkpoint_parity(spark, tmp_path_factory, triples):
-    """checkpoint="minimal" (fused map prefix, the at-scale default) must
-    produce the identical triple set as checkpoint="full", while writing
-    NO corpus-sized intermediates."""
-    root = str(tmp_path_factory.mktemp("catalog_min"))
-    cat = Catalog(spark, root)
-    webtext = synth_webtext(spark, N_DOCS)
-    anchor = synth_anchor_text(spark, 800)
-    redirects = synth_redirects(spark)
-    t_min = run_pipeline(
-        spark, cat, webtext, TERM2LABEL, anchor, redirects,
-        corpus_fingerprint=f"synth:{N_DOCS}",
-    )
-    stages = {m["stage"] for m in cat.lineage()}
-    assert "extract" not in stages and "sentencize" not in stages
-    assert "match" in stages
-    a = {tuple(r) for r in t_min.collect()}
-    b = {tuple(r) for r in triples.collect()}
-    assert a == b
 
 
 def test_write_respects_file_sizing_and_sort_layout(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""Structured Streaming ingestion + multimodal plumbing."""
+"""Structured Streaming operators + multimodal plumbing."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -7,34 +7,6 @@ from thesaurus_based_ner_spark.operators.multimodal import (
     decode_and_featurize,
     synth_media,
 )
-from thesaurus_based_ner_spark.sources.webtext import THESAURUS, synth_webtext
-from thesaurus_based_ner_spark.streaming.ingest import ingest_available_now
-
-
-def test_available_now_ingest_is_incremental(spark, tmp_path):
-    wt_dir = str(tmp_path / "webtext")
-    out_dir = str(tmp_path / "mentions")
-    ckpt = str(tmp_path / "ckpt")
-    # batch 1: 30 docs
-    synth_webtext(spark, 30).write.mode("append").parquet(wt_dir)
-    ingest_available_now(spark, wt_dir, out_dir, ckpt, dict(THESAURUS))
-    n1 = spark.read.parquet(out_dir).count()
-    assert n1 > 0
-    # batch 2: 30 more docs (ids 30-59 via offset trick: regenerate 60 and
-    # subtract — simplest: write disjoint docs by filtering urls)
-    more = synth_webtext(spark, 60).filter(
-        F.split(F.col("url"), "/").getItem(4).cast("int") >= 30
-    )
-    more.write.mode("append").parquet(wt_dir)
-    ingest_available_now(spark, wt_dir, out_dir, ckpt, dict(THESAURUS))
-    n2 = spark.read.parquet(out_dir).count()
-    assert n2 > n1
-    # no duplicates: each url:snt_id:span appears once
-    m = spark.read.parquet(out_dir)
-    assert (
-        m.groupBy("url", "snt_id", "m_start", "m_end").count().filter("count > 1").count()
-        == 0
-    )
 
 
 def test_multimodal_plumbing_fake_decoder(spark):

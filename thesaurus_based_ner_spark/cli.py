@@ -33,7 +33,7 @@ def _get_session(args):
 
 
 def _load_thesaurus(spark, path: str | None):
-    """No path → the fixture dict (VALUES-literal dim). A path → a
+    """No path → the fixture dict (broadcast trie). A path → a
     DISTRIBUTED (term, label) DataFrame: parquet directly, TSV via a
     parallel CSV scan — a 23M-surface dim never visits the driver
     (the pipeline's mention stage handles both input shapes)."""
@@ -102,9 +102,7 @@ def cmd_pipeline(args) -> int:
         _load_thesaurus(spark, args.thesaurus),
         anchor,
         redirects,
-        strategy=args.strategy,
         corpus_fingerprint=args.fingerprint,
-        checkpoint=args.checkpoint,
     )
     n = triples.count()
     print(
@@ -171,8 +169,6 @@ def build_parser() -> argparse.ArgumentParser:
     pp.add_argument("--anchor", help="anchor-text parquet (entity, surface)")
     pp.add_argument("--redirects", help="redirect parquet (src, dst)")
     pp.add_argument("--output", required=True, help="catalog root for checkpoints")
-    pp.add_argument("--strategy", choices=["df", "trie"], default="df")
-    pp.add_argument("--checkpoint", choices=["minimal", "full"], default="minimal")
     pp.add_argument("--fingerprint", default="", help="corpus fingerprint for resume")
     pp.set_defaults(fn=cmd_pipeline)
 

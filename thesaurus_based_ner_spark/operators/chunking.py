@@ -246,32 +246,3 @@ def right_shift_match_chunks(
         )
         .distinct()
     )
-
-
-def ends_with_match_chunks(
-    chunks: DataFrame, matches: DataFrame, id_cols: list[str]
-) -> DataFrame:
-    """J5 ends-with chunk⋈match (reference ends_with_match,
-    matcher_model.py:101-113): a chunk takes the label of the match ending
-    exactly at the chunk end and starting inside it; chunks with ≥ 2 such
-    matches are ambiguous (the reference raises NotImplementedError — we
-    drop them deterministically, documented divergence)."""
-    c = chunks.select(
-        *[F.col(x).alias(f"__c_{x}") for x in id_cols],
-        F.col("m_start").alias("__cs"),
-        F.col("m_end").alias("__ce"),
-    )
-    cond = (F.col("m_end") == F.col("__ce")) & (
-        F.col("__cs") <= F.col("m_start")
-    )
-    for x in id_cols:
-        cond = cond & (F.col(x) == F.col(f"__c_{x}"))
-    hits = matches.join(c, cond).groupBy(
-        *[F.col(f"__c_{x}").alias(x) for x in id_cols], "__cs", "__ce"
-    ).agg(F.count("*").alias("__k"), F.min("label").alias("label"))
-    return hits.filter(F.col("__k") == 1).select(
-        *id_cols,
-        F.col("__cs").alias("m_start"),
-        F.col("__ce").alias("m_end"),
-        "label",
-    )

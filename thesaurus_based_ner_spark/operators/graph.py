@@ -41,6 +41,13 @@ def _ensure_safe_optimizer(spark) -> None:
         )
 
 
+def _empty(df: DataFrame) -> bool:
+    """Convergence test for the iterative operators: a 1-row count
+    aggregate, consistent with the signature convergence tests elsewhere —
+    no isEmpty in any iterative loop."""
+    return df.agg(F.count("*").alias("n")).collect()[0]["n"] == 0
+
+
 def ancestor_closure(
     edges: DataFrame,
     child_col: str = "child",
@@ -54,6 +61,8 @@ def ancestor_closure(
     ontologies (UMLS tree depth ≤ 9); we extend one level per round and stop
     when no new pairs appear. include_self mirrors the reference's
     get_ascendant_tuis which includes the node itself (utils.py:343-360).
+    Raises RuntimeError rather than return a truncated closure when the
+    hierarchy needs more than max_depth rounds.
     """
     _ensure_safe_optimizer(edges.sparkSession)
     e = checkpoint(
@@ -75,21 +84,30 @@ def ancestor_closure(
             out = out.unionByName(fork(d))
         return out
 
-    for _ in range(max_depth):
-        nxt = (
-            fork(frontier).alias("f")
+    def _expand(cur: DataFrame) -> DataFrame:
+        return checkpoint(
+            fork(cur).alias("f")
             .join(fork(e).alias("e"), F.col("f.ancestor") == F.col("e.node"))
             .select(F.col("f.node"), F.col("e.ancestor"))
             .distinct()
             .join(_closure_so_far(), ["node", "ancestor"], "left_anti")
         )
-        nxt = checkpoint(nxt)
-        # 1-row count aggregate, consistent with the signature convergence
-        # tests elsewhere — no isEmpty in any iterative loop
-        if nxt.agg(F.count("*").alias("n")).collect()[0]["n"] == 0:
+
+    converged = False
+    for _ in range(max_depth):
+        nxt = _expand(frontier)
+        if _empty(nxt):
+            converged = True
             break
         deltas.append(nxt)
         frontier = nxt
+    # same contract as descendants_bfs: one extra expansion tells "done on
+    # the last round" from "truncated", and a truncated closure raises
+    if not converged and not _empty(_expand(frontier)):
+        raise RuntimeError(
+            f"ancestor_closure: new pairs still found after max_depth="
+            f"{max_depth} rounds; raise max_depth for this hierarchy"
+        )
     closure = _closure_so_far()
     if include_self:
         nodes = (
@@ -147,8 +165,7 @@ def descendants_bfs(
     converged = False
     for _ in range(max_depth):
         nxt = _expand(frontier)
-        # 1-row count aggregate for convergence — no isEmpty in loops
-        if nxt.agg(F.count("*").alias("n")).collect()[0]["n"] == 0:
+        if _empty(nxt):
             converged = True
             break
         seen.append(nxt)
@@ -159,10 +176,7 @@ def descendants_bfs(
         # though the closure is complete (ADVICE r5) — one extra
         # expansion distinguishes "done on the last round" from
         # "genuinely truncated".
-        converged = (
-            _expand(frontier).agg(F.count("*").alias("n")).collect()[0]["n"]
-            == 0
-        )
+        converged = _empty(_expand(frontier))
     if not converged:
         # ADVICE r4: the reference (get_descendants_cuis, genia.py:46-71)
         # iterates until the frontier empties — returning a silently

@@ -6,17 +6,24 @@ is pytest-enforced against the pure-Python oracle in functions/matcher.py):
 1. ``detect_mentions_df`` — pure DataFrame: token n-gram generation with
    higher-order functions (one explode, no Python), broadcast hash join
    against the thesaurus, window-based overlap resolution. Fully JVM-side /
-   whole-stage-codegen; the default at scale. N-gram fan-out is pruned to
-   the distinct token-lengths present in the thesaurus, so cost is
+   whole-stage-codegen. N-gram fan-out is pruned to the distinct
+   token-lengths present in the thesaurus, so cost is
    Σ|tokens| × |distinct term lengths| candidate rows that die in the
    broadcast join's hash probe — no shuffle until the (tiny) mention set.
+   The pipeline uses it for a (term, label) DataFrame thesaurus: the dim
+   is built JVM-side (thesaurus_dim_from_df) and never visits the driver.
 
 2. ``detect_mentions_trie`` — Arrow-batched ``mapInPandas`` running the
    broadcast token-trie (functions/matcher.py). One pass per sentence,
-   no candidate blow-up; wins when the thesaurus has many long terms. This
-   is the "batched Aho-Corasick/trie matching inside vectorized
-   pandas-on-Arrow UDFs" shape of the north star: per *batch* Python, never
-   per-row serde.
+   no candidate blow-up. This is the "batched Aho-Corasick/trie matching
+   inside vectorized pandas-on-Arrow UDFs" shape of the north star: per
+   *batch* Python, never per-row serde. The pipeline uses it for a dict
+   thesaurus. It is the faster path on both measured shapes: on 20k
+   synthetic pages (4 cores) the pipeline's match stage took 2.7 s in
+   2 jobs vs 7.9-8.3 s in 8 jobs for the n-gram join, and at sf0.1 the
+   `mention_spans_trie` query took 1.86 s vs 2.99 s for `mention_spans`.
+   ``detect_mentions_trie_dist`` is the same trie fed from a DataFrame
+   through a parquet side file (the `mention_spans_dist` query).
 
 Overlap semantics (both paths): reference leave_only_longet_match —
 connected overlap components, keep max-end then min-start

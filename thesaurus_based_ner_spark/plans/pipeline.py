@@ -7,14 +7,16 @@ resumable by fingerprint — reference analog: md5-keyed buffer dirs,
   webtext → extract (byte-identity verified) → sentences → mentions
           → linked mentions → canonical entities → triples
 
-Physical shape of the hot path (SURVEY.md §4):
+Physical shape of the hot path (SURVEY.md §4), one fused job up to the
+mentions table:
   BatchScan webtext (lang filter pushed down) → mapInPandas[extract] →
-  explode sentences (built-in) → broadcast-join mention match (JVM) or
-  broadcast-trie mapInPandas → window dedup → broadcast link join →
-  repartitionByRange(subj) → partitioned triple write.
+  explode sentences (built-in) → broadcast-trie mapInPandas (dict
+  thesaurus) or broadcast-join n-gram match (DataFrame thesaurus) →
+  window dedup → broadcast link join → repartitionByRange(subj) →
+  partitioned triple write.
 
-Only HTML extraction and (optionally) trie matching leave the JVM, both as
-Arrow-batched pandas UDFs.
+HTML extraction and trie matching leave the JVM, both as Arrow-batched
+pandas UDFs.
 """
 
 from __future__ import annotations
@@ -37,9 +39,7 @@ from thesaurus_based_ner_spark.operators.linking import (
 from thesaurus_based_ner_spark.operators.mentions import (
     detect_mentions_df,
     detect_mentions_trie,
-    detect_mentions_trie_dist,
     thesaurus_dim_from_df,
-    thesaurus_with_case,
     tokenize_df,
 )
 from thesaurus_based_ner_spark.sources.catalog import Catalog
@@ -84,26 +84,19 @@ def sentence_stage(extracted: DataFrame, lang: str = "en") -> DataFrame:
 
 
 def mention_stage(
-    sentences: DataFrame,
-    term2label: "dict[str, str] | DataFrame",
-    strategy: str = "df",
+    sentences: DataFrame, term2label: "dict[str, str] | DataFrame"
 ) -> DataFrame:
-    """term2label may be a dict (fixture-sized dims: VALUES literal /
-    broadcast python dict) or a (term, label) DataFrame — the 23M-surface
-    shape, where the dim must never visit the driver: the DF strategy
-    builds the dim JVM-side (thesaurus_dim_from_df) and the trie strategy
-    builds per-executor tries from a parquet side file."""
+    """The matcher follows the thesaurus's type. A dict (driver-sized)
+    ships as a broadcast to the Arrow-batched trie UDF. A (term, label)
+    DataFrame — the 23M-surface shape, where the dim must never visit the
+    driver — is built into a dim JVM-side (thesaurus_dim_from_df) and
+    matched by the n-gram broadcast join, with no side storage."""
     ids = ["url", "snt_id"]
     if isinstance(term2label, DataFrame):
-        if strategy == "trie":
-            return detect_mentions_trie_dist(sentences, term2label, ids)
         return detect_mentions_df(
             sentences, thesaurus_dim_from_df(term2label), ids
         )
-    if strategy == "trie":
-        return detect_mentions_trie(sentences, term2label, ids)
-    th = thesaurus_with_case(sentences.sparkSession, term2label)
-    return detect_mentions_df(sentences, th, ids)
+    return detect_mentions_trie(sentences, term2label, ids)
 
 
 def triple_stage(
@@ -205,32 +198,25 @@ def run_pipeline(
     spark: SparkSession,
     catalog: Catalog,
     webtext: DataFrame,
-    term2label: dict[str, str],
+    term2label: "dict[str, str] | DataFrame",
     anchor: DataFrame,
     redirects: DataFrame | None = None,
-    strategy: str = "df",
     corpus_fingerprint: str = "",
-    checkpoint: str = "minimal",
     canonical_salt: int | str = 1,
 ) -> DataFrame:
     """Run (or resume) the full pipeline; returns the triples DataFrame.
 
     Every materialized stage is fingerprinted on (corpus, thesaurus,
-    strategy); a rerun after a crash reuses all finished stages (kill/rerun
-    test in tests/test_pipeline.py).
+    anchor, redirects); a rerun after a crash reuses all finished stages
+    (kill/rerun test in tests/test_pipeline.py).
 
-    checkpoint="minimal" (default): the map-only prefix
-    extract → sentencize → match runs FUSED in one job and only the
-    mentions table (≈1-3% of token volume) is materialized. At corpus
-    scale this is the only sane choice: checkpointing the extracted text
-    and the tokenized sentences writes ~3× the corpus to storage per run,
-    and recomputing the map prefix after a crash is cheaper than that
-    write volume. It also minimizes memory/IO traffic — the corpus is
-    read once and never rewritten.
-
-    checkpoint="full": additionally materialize the `extracted` and
-    `sentences` intermediates (debugging / per-stage inspection / finer
-    resume granularity).
+    The map-only prefix extract → sentencize → match runs FUSED in one
+    job and only the mentions table (≈1-3% of token volume) is
+    materialized: checkpointing the extracted text and the tokenized
+    sentences would write ~3× the corpus to storage per run, and
+    recomputing the map prefix after a crash is cheaper than that write
+    volume. The corpus is read once and never rewritten. mention_stage
+    picks the matcher from term2label's type.
     """
     th_fp = (
         _df_digest(term2label)
@@ -238,8 +224,7 @@ def run_pipeline(
         else _fp(sorted(term2label.items()))
     )
     base_fp = _fp(
-        corpus_fingerprint, th_fp, strategy,
-        _df_digest(anchor), _df_digest(redirects),
+        corpus_fingerprint, th_fp, _df_digest(anchor), _df_digest(redirects),
     )
     # canonical_salt="auto" measures the anchor's surface skew and picks
     # the salt (operators/canonicalize.choose_canonical_salt) — the
@@ -261,7 +246,7 @@ def run_pipeline(
     canon_fp = _fp(base_fp, canonical_salt)
 
     # The DAG has two independent branches:
-    #   docs:  webtext → extracted → sentences → mentions
+    #   docs:  webtext → (extract → sentencize → match) → mentions
     #   dims:  anchor  → candidates / canonical   (doc-count independent)
     # Spark's scheduler runs concurrently-submitted jobs in parallel (FIFO
     # across free task slots), so the dim branch is built on a side thread
@@ -289,26 +274,13 @@ def run_pipeline(
     with ThreadPoolExecutor(max_workers=1) as pool:
         dim_future = pool.submit(_dim_branch)
 
-        if checkpoint == "full":
-            extracted = catalog.materialize(
-                "extracted",
-                lambda: extract_stage(webtext),
-                fingerprint=base_fp,
-                stage="extract",
-            )
-            sentences = catalog.materialize(
-                "sentences",
-                lambda: sentence_stage(extracted),
-                fingerprint=base_fp,
-                stage="sentencize",
-            )
-        else:
-            # fused map prefix: one job, corpus read once, nothing
-            # corpus-sized ever written
-            sentences = sentence_stage(extract_stage(webtext))
+        # fused map prefix: one job, corpus read once, nothing
+        # corpus-sized ever written
         catalog.materialize(
             "mentions",
-            lambda: mention_stage(sentences, term2label, strategy),
+            lambda: mention_stage(
+                sentence_stage(extract_stage(webtext)), term2label
+            ),
             fingerprint=base_fp,
             stage="match",
         )

@@ -212,8 +212,3 @@ def synth_redirects(spark: SparkSession) -> DataFrame:
         ("ent_UN", "ent_United_Nations"),
     ]
     return _values_df(spark, rows, "src, dst")
-
-
-def term_lengths(tokenizer) -> list[int]:
-    """Distinct token lengths present in the thesaurus (for n-gram pruning)."""
-    return sorted({len(tokenizer(t)) for t, _ in THESAURUS})

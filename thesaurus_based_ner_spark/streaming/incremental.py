@@ -44,10 +44,9 @@ def incremental_kg(
     webtext_dir: str,
     catalog_root: str,
     checkpoint_dir: str,
-    term2label: dict[str, str],
+    term2label: "dict[str, str] | DataFrame",
     anchor: DataFrame,
     redirects: DataFrame | None = None,
-    strategy: str = "df",
 ) -> DataFrame:
     """Drain new/updated pages, refresh the KG, return the triples table."""
     cat = Catalog(spark, catalog_root)
@@ -55,8 +54,7 @@ def incremental_kg(
     canon = canonicalize_entities(anchor, redirects)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        snts = sentence_stage(extract_stage(batch_df))
-        ments = mention_stage(snts, term2label, strategy)
+        ments = mention_stage(sentence_stage(extract_stage(batch_df)), term2label)
         linked = link_mentions(ments, candidates)
         cat.replace_groups(
             "linked_mentions", linked, ["url"], stage=f"link:e{epoch_id}"

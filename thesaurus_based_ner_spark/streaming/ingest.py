@@ -1,101 +1,22 @@
-"""Incremental crawl ingestion via Structured Streaming (SURVEY.md §2.10).
+"""Structured Streaming operators over growing parquet directories
+(SURVEY.md §2.10):
 
-The reference is pure batch; the north_rule requires resumable batch. This
-module adds the Spark-native extension: `Trigger.AvailableNow` over a
-growing webtext directory — each run drains exactly the new files, runs the
-mention pipeline per micro-batch via foreachBatch, and appends to the
-mention table with checkpoint-tracked progress (exactly-once per file).
+- `streaming_dedup_first_seen`: cross-micro-batch exact dedup held in the
+  state store, drained with `Trigger.AvailableNow`;
+- `click_purchase_join_stream`: watermarked stream-stream interval join,
+  the streaming twin of plans/queries.click_purchase_attribution;
+- `session_window_counts_stream`: per-user session windows, the streaming
+  twin of a batch session_window rollup.
 
-Also provides a watermarked windowed rollup (late-data-safe counters) as
-the streaming counterpart of plans/queries.hourly_event_rollup.
+The last two return streaming DataFrames; the caller picks the sink and
+trigger.
+
+The crawl → KG refresh path is streaming/incremental.incremental_kg.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from thesaurus_based_ner_spark.operators.mentions import (
-    detect_mentions_df,
-    thesaurus_with_case,
-)
-from thesaurus_based_ner_spark.sources.webtext import WEBTEXT_SCHEMA
-
-
-def ingest_available_now(
-    spark: SparkSession,
-    webtext_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    term2label: dict[str, str],
-) -> None:
-    """Drain all currently-available webtext parquet files through the
-    mention pipeline, append results, remember progress in the checkpoint.
-    Re-running after new files arrive processes only the delta.
-
-    Output layout: epoch=N partition subdirectories (so a retried epoch
-    overwrites its own partition — exactly-once). An out_dir written by the
-    pre-epoch flat layout cannot be mixed with this one: flat parquet files
-    next to partition dirs break spark.read.parquet partition discovery.
-    Fail fast rather than corrupt reads.
-    """
-    import os
-
-    if os.path.isdir(out_dir):
-        flat = [
-            f
-            for f in os.listdir(out_dir)
-            if f.endswith(".parquet") and os.path.isfile(os.path.join(out_dir, f))
-        ]
-        if flat:
-            raise ValueError(
-                f"{out_dir} holds flat parquet files from the pre-epoch "
-                "layout; migrate them into epoch=N subdirectories (or use "
-                "a fresh out_dir) before streaming ingest"
-            )
-    th = thesaurus_with_case(spark, term2label)
-    stream = (
-        spark.readStream.schema(WEBTEXT_SCHEMA).parquet(webtext_dir)
-    )
-
-    from thesaurus_based_ner_spark.plans.pipeline import sentence_stage
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        # the batch pipeline's own sentence stage — one canonical
-        # implementation, so batch and stream cannot drift
-        mentions = detect_mentions_df(
-            sentence_stage(batch_df), th, ["url", "snt_id"]
-        )
-        # foreachBatch is at-least-once: a retried epoch must OVERWRITE
-        # its own partition, not append a second copy
-        mentions.write.mode("overwrite").parquet(f"{out_dir}/epoch={epoch_id}")
-
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def windowed_event_counts_stream(
-    spark: SparkSession, events_dir: str, schema, gap: str = "1 hour"
-) -> DataFrame:
-    """Watermarked tumbling-window counts; memory-sink driven to completion
-    by the caller (tests use processAllAvailable)."""
-    ev = spark.readStream.schema(schema).parquet(events_dir)
-    return (
-        # parquet timestamps are NTZ; watermarks require TIMESTAMP
-        ev.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", gap), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias("hour"),
-            "event_type",
-            "n",
-        )
-    )
 
 
 def streaming_dedup_first_seen(
