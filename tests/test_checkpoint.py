@@ -6,7 +6,13 @@ import logging
 import pathlib
 
 import thesaurus_based_ner_spark
-from thesaurus_based_ner_spark.operators.checkpoint import checkpoint
+import pytest
+from pyspark.sql import functions as F
+
+from thesaurus_based_ner_spark.operators.checkpoint import (
+    checkpoint,
+    checkpoint_observed,
+)
 
 
 def test_checkpoint_fallback_is_logged_and_cached(spark, monkeypatch, caplog):
@@ -26,6 +32,39 @@ def test_checkpoint_fallback_is_logged_and_cached(spark, monkeypatch, caplog):
         assert out.is_cached
         assert sorted(map(tuple, out.collect())) == want
     finally:
+        out.unpersist()
+
+
+@pytest.mark.parametrize("fallback", [False, True])
+def test_checkpoint_observed_metrics_ride_the_checkpoint_job(spark, monkeypatch, fallback):
+    """The observed aggregates come back from the checkpoint's own job,
+    on the localCheckpoint path and on the cache + count fallback."""
+    df = spark.range(10).selectExpr("id", "id % 3 AS k")
+    if fallback:
+        def boom(self, eager=True):
+            raise RuntimeError("localCheckpoint unavailable")
+
+        monkeypatch.setattr(type(df), "localCheckpoint", boom)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def jobs(fn):
+        before = dag.numTotalJobs()
+        out = fn()
+        return out, dag.numTotalJobs() - before
+
+    plain, plain_jobs = jobs(lambda: checkpoint(df))
+    (out, metrics), observed_jobs = jobs(
+        lambda: checkpoint_observed(
+            df, F.count(F.lit(1)).alias("n"), F.sum("k").alias("s")
+        )
+    )
+    try:
+        assert metrics == {"n": 10, "s": 9}
+        # reading the metrics runs no job beyond the checkpoint's own
+        assert observed_jobs == plain_jobs
+        assert sorted(map(tuple, out.collect())) == sorted(map(tuple, df.collect()))
+    finally:
+        plain.unpersist()
         out.unpersist()
 
 

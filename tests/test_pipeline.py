@@ -271,3 +271,37 @@ def test_pipeline_auto_canonical_salt(spark, triples, tmp_path):
     )
     want = {tuple(r) for r in triples.collect()}
     assert {tuple(r) for r in got.collect()} == want
+
+
+def test_dim_branch_failure_raises_and_resumes(spark, tmp_path, monkeypatch):
+    """canonicalize runs on a worker thread beside match and link: its
+    failure must still raise from run_pipeline, before any triples are
+    written, and a rerun reuses every stage that finished."""
+    from thesaurus_based_ner_spark.plans import pipeline
+
+    def broken(*a, **kw):
+        raise RuntimeError("canonicalize failed")
+
+    cat = Catalog(spark, str(tmp_path / "cat_fail"))
+
+    def run():
+        return run_pipeline(
+            spark, cat, synth_webtext(spark, N_DOCS), TERM2LABEL,
+            synth_anchor_text(spark, 800), synth_redirects(spark),
+            corpus_fingerprint=f"synth:{N_DOCS}",
+        )
+
+    monkeypatch.setattr(pipeline, "canonicalize_entities", broken)
+    with pytest.raises(RuntimeError, match="canonicalize failed"):
+        run()
+    assert not cat.exists("triples")
+    assert not cat.exists("canonical")
+    before = {m["table"]: m["written_at"] for m in cat.lineage()}
+    assert {"mentions", "candidates", "linked"} <= before.keys()
+
+    monkeypatch.undo()
+    run()
+    after = {m["table"]: m["written_at"] for m in cat.lineage()}
+    for tbl in ["mentions", "candidates", "linked"]:
+        assert after[tbl] == before[tbl], f"{tbl} was rebuilt on rerun"
+    assert cat.exists("triples") and cat.exists("canonical")

@@ -68,3 +68,46 @@ def test_live_session_confs(spark):
     conf = spark.conf
     assert conf.get("spark.python.worker.killOnIdleTimeout") == "true"
     assert int(conf.get("spark.python.worker.idleTimeoutSeconds")) == 1800
+
+
+def test_driver_memory_default_fits_host(monkeypatch):
+    """The library's driver heap default is half the host's memory (or
+    its cgroup limit), 1g-48g — never the old fixed 48g on a smaller box."""
+    from thesaurus_based_ner_spark import session
+
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    with open("/proc/meminfo") as f:
+        host_kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+    got = session.driver_memory()
+    assert got == session.host_driver_memory()
+    gb = int(got.rstrip("g"))
+    assert 1 <= gb <= 48
+    assert gb * 2**30 <= max(2**30, host_kb * 1024 // 2)
+
+
+def test_driver_memory_derivation(tmp_path):
+    from thesaurus_based_ner_spark.session import host_driver_memory
+
+    def meminfo(gib):
+        p = tmp_path / f"meminfo{gib}"
+        p.write_text(f"MemTotal:       {gib * 2**20} kB\nMemFree: 1 kB\n")
+        return str(p)
+
+    def cgroup(text):
+        p = tmp_path / "memory.max"
+        p.write_text(text + "\n")
+        return str(p)
+
+    missing = str(tmp_path / "no-cgroup")
+    assert host_driver_memory(meminfo(16), missing) == "8g"
+    assert host_driver_memory(meminfo(256), missing) == "48g"  # capped
+    assert host_driver_memory(meminfo(1), missing) == "1g"  # floor
+    assert host_driver_memory(meminfo(16), cgroup("max")) == "8g"
+    assert host_driver_memory(meminfo(16), cgroup(str(6 * 2**30))) == "3g"
+
+
+def test_driver_memory_env_override_wins(monkeypatch):
+    from thesaurus_based_ner_spark import session
+
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+    assert session.driver_memory() == "3g"

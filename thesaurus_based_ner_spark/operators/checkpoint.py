@@ -1,15 +1,17 @@
 """The one way the package materializes an intermediate frame.
 
 Iterative graph loops and self-joined dedup frames cut their lineage with
-``checkpoint``; ``fork`` gives one materialized frame fresh attribute ids
-per reference inside a single plan.
+``checkpoint``; ``checkpoint_observed`` also returns aggregates of the
+checkpointed rows from the same job, so a loop can test convergence without
+an action of its own. ``fork`` gives one materialized frame fresh attribute
+ids per reference inside a single plan.
 """
 
 from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 log = logging.getLogger(__name__)
 
@@ -34,6 +36,18 @@ def checkpoint(df: DataFrame) -> DataFrame:
         df = df.cache()
         df.count()
         return df
+
+
+def checkpoint_observed(df: DataFrame, *metrics: Column) -> tuple[DataFrame, dict]:
+    """``checkpoint(df)`` plus ``metrics``, aggregates over df's rows.
+
+    An Observation rides the checkpoint's own job (the cache + count
+    fallback runs the observed plan too), so reading the metrics costs no
+    further Spark job. Returns (checkpointed frame, {alias: value}).
+    """
+    obs = Observation()
+    cp = checkpoint(df.observe(obs, *metrics))
+    return cp, obs.get
 
 
 def fork(df: DataFrame) -> DataFrame:

@@ -2,8 +2,9 @@
 
 Iterative DataFrame fixpoints with bounded depth + convergence checks,
 localCheckpoint every few rounds to cut lineage (SURVEY §7 "what's hard").
-All loops are driver-side control flow over distributed joins — no
-collect() of edge data.
+All loops are driver-side control flow over distributed joins. A loop's
+convergence test reads an aggregate observed on the round's own checkpoint
+job (checkpoint_observed): no loop runs a driver action of its own.
 
 Reference parity:
 - ancestor_closure    ← expand_tuis / expand_dbpedia_cats + tree ascendants
@@ -18,9 +19,13 @@ Reference parity:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
-from thesaurus_based_ner_spark.operators.checkpoint import checkpoint, fork
+from thesaurus_based_ner_spark.operators.checkpoint import (
+    checkpoint,
+    checkpoint_observed,
+    fork,
+)
 
 
 _BAD_RULE = "org.apache.spark.sql.catalyst.optimizer.RemoveRedundantAliases"
@@ -39,13 +44,6 @@ def _ensure_safe_optimizer(spark) -> None:
             "spark.sql.optimizer.excludedRules",
             f"{cur},{_BAD_RULE}" if cur else _BAD_RULE,
         )
-
-
-def _empty(df: DataFrame) -> bool:
-    """Convergence test for the iterative operators: a 1-row count
-    aggregate, consistent with the signature convergence tests elsewhere —
-    no isEmpty in any iterative loop."""
-    return df.agg(F.count("*").alias("n")).collect()[0]["n"] == 0
 
 
 def ancestor_closure(
@@ -84,26 +82,29 @@ def ancestor_closure(
             out = out.unionByName(fork(d))
         return out
 
-    def _expand(cur: DataFrame) -> DataFrame:
-        return checkpoint(
+    def _expand(cur: DataFrame) -> tuple[DataFrame, int]:
+        """(new pairs, how many) — the count rides the checkpoint job."""
+        nxt, obs = checkpoint_observed(
             fork(cur).alias("f")
             .join(fork(e).alias("e"), F.col("f.ancestor") == F.col("e.node"))
             .select(F.col("f.node"), F.col("e.ancestor"))
             .distinct()
-            .join(_closure_so_far(), ["node", "ancestor"], "left_anti")
+            .join(_closure_so_far(), ["node", "ancestor"], "left_anti"),
+            F.count(F.lit(1)).alias("n"),
         )
+        return nxt, obs["n"]
 
     converged = False
     for _ in range(max_depth):
-        nxt = _expand(frontier)
-        if _empty(nxt):
+        nxt, n_new = _expand(frontier)
+        if n_new == 0:
             converged = True
             break
         deltas.append(nxt)
         frontier = nxt
     # same contract as descendants_bfs: one extra expansion tells "done on
     # the last round" from "truncated", and a truncated closure raises
-    if not converged and not _empty(_expand(frontier)):
+    if not converged and _expand(frontier)[1] != 0:
         raise RuntimeError(
             f"ancestor_closure: new pairs still found after max_depth="
             f"{max_depth} rounds; raise max_depth for this hierarchy"
@@ -153,19 +154,23 @@ def descendants_bfs(
             out = out.unionByName(fork(d))
         return out
 
-    def _expand(cur: DataFrame) -> DataFrame:
-        return checkpoint(
+    def _expand(cur: DataFrame) -> tuple[DataFrame, int]:
+        """(newly reached nodes, how many) — the count rides the
+        checkpoint job."""
+        nxt, obs = checkpoint_observed(
             fork(cur).alias("f")
             .join(fork(e).alias("e"), F.col("f.node") == F.col("e.parent"))
             .select(F.col("e.child").alias("node"))
             .distinct()
-            .join(_seen(), ["node"], "left_anti")
+            .join(_seen(), ["node"], "left_anti"),
+            F.count(F.lit(1)).alias("n"),
         )
+        return nxt, obs["n"]
 
     converged = False
     for _ in range(max_depth):
-        nxt = _expand(frontier)
-        if _empty(nxt):
+        nxt, n_new = _expand(frontier)
+        if n_new == 0:
             converged = True
             break
         seen.append(nxt)
@@ -176,7 +181,7 @@ def descendants_bfs(
         # though the closure is complete (ADVICE r5) — one extra
         # expansion distinguishes "done on the last round" from
         # "genuinely truncated".
-        converged = _empty(_expand(frontier))
+        converged = _expand(frontier)[1] == 0
     if not converged:
         # ADVICE r4: the reference (get_descendants_cuis, genia.py:46-71)
         # iterates until the frontier empties — returning a silently
@@ -214,17 +219,25 @@ def resolve_chains(
             .select("src", F.coalesce("__d", "root").alias("root"),
                     F.col("__s").isNotNull().alias("__moved"))
         )
-        stepped = checkpoint(stepped)
-        # 1-row signature aggregate (same trick as twostar CC) — the
-        # convergence decision costs one tiny collect, never a filtered
-        # materialization
-        moved = stepped.agg(
-            F.max(F.col("__moved").cast("int")).alias("m")
-        ).collect()[0]["m"]
+        # whether any row moved is observed on the checkpoint job itself:
+        # the convergence decision costs no Spark job of its own
+        stepped, obs = checkpoint_observed(
+            stepped, F.max(F.col("__moved").cast("int")).alias("m")
+        )
         cur = stepped.drop("__moved")
-        if not moved:
+        if not obs["m"]:
             break
     return cur
+
+
+def _edge_signature() -> list[Column]:
+    """(count, xor of row hashes) over the (u, v) rows with u != v: two
+    equal signatures in a row mean the edge set stopped changing."""
+    edge = F.col("u") != F.col("v")
+    return [
+        F.count(F.when(edge, 1)).alias("n"),
+        F.bit_xor(F.when(edge, F.xxhash64("u", "v"))).alias("h"),
+    ]
 
 
 def connected_components_twostar(
@@ -238,41 +251,45 @@ def connected_components_twostar(
 
     Converges in O(log n) rounds on ANY graph shape, so web graphs with
     long chains or unknown diameter stay cheap. Each round is two
-    groupBy-min + join shuffles, all key-partitioned; convergence is
-    detected from a 1-row signature aggregate (count + xor of row hashes),
-    not a driver anti-join.
+    groupBy-min + join shuffles, all key-partitioned, and two
+    checkpoints. Convergence compares a signature (count + xor of row
+    hashes) observed on the small-star checkpoint's own job with the
+    previous round's: a round costs no signature job and no driver
+    anti-join.
 
     large-star: every neighbor v > u re-points at m(u) = min(N(u) ∪ {u});
     small-star: every neighbor v ≤ u (and u itself) points at m(u).
     At fixpoint every node points directly at its component min.
+
+    An edge with a NULL endpoint joins nothing; each of its endpoints,
+    NULL included, is emitted as its own component unless an edge
+    connects it. So is a node that appears only in self-loops.
     """
     _ensure_safe_optimizer(edges.sparkSession)
-    # one distinct, after canonicalization: a pre-canonical distinct would
-    # be strictly redundant (the (greatest, least) distinct below yields
-    # the identical edge set from duplicated or mirrored input) and cost a
-    # second full shuffle of the edge set before the loop (r9)
-    e = edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")).filter(
-        F.col("u") != F.col("v")
+    # Every input row as a canonical (big, small) pair, checkpointed once:
+    # the loop starts from its u != v rows, and the singleton roots come
+    # from its endpoints, so the input plan runs once. The swap is a
+    # comparison, not greatest/least, which skip NULLs: a row with a NULL
+    # endpoint keeps both endpoints as they are. One distinct, after
+    # canonicalization: the (big, small) distinct yields the identical
+    # edge set from duplicated or mirrored input (r9).
+    swap = F.col("x") < F.col("y")
+    pairs, sig = checkpoint_observed(
+        edges.select(F.col(a_col).alias("x"), F.col(b_col).alias("y"))
+        .select(
+            F.when(swap, F.col("y")).otherwise(F.col("x")).alias("u"),
+            F.when(swap, F.col("x")).otherwise(F.col("y")).alias("v"),
+        )
+        .distinct(),
+        *_edge_signature(),
     )
-    # operate on canonical (big, small) pairs, symmetrize per round
-    cur = e.select(
-        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-    ).distinct()
-    cur = checkpoint(cur)
-
-    def _sig(df: DataFrame) -> tuple:
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
+    cur = pairs.filter(F.col("u") != F.col("v"))
 
     def _min_nbr(sym: DataFrame) -> DataFrame:
         return sym.groupBy("u").agg(F.min("v").alias("__mv")).select(
             "u", F.least("__mv", "u").alias("m")
         )
 
-    sig = _sig(cur)
     for _ in range(max_iters):
         sym = cur.union(cur.select(F.col("v").alias("u"), F.col("u").alias("v")))
         mn = _min_nbr(sym)
@@ -295,20 +312,19 @@ def connected_components_twostar(
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(mn.select(F.col("u"), F.col("m").alias("v")))
         )
-        cur = small.filter(F.col("u") != F.col("v")).distinct()
-        cur = checkpoint(cur)
-        new_sig = _sig(cur)
+        cur, new_sig = checkpoint_observed(
+            small.filter(F.col("u") != F.col("v")).distinct(), *_edge_signature()
+        )
         if new_sig == sig:
             break
         sig = new_sig
     # fixpoint: (u, v) edges point nodes at their component min
     membership = cur.select(F.col("u").alias("node"), F.col("v").alias("component"))
-    # singletons come from the ORIGINAL edge list: a node appearing only
-    # in self-loops was filtered out of `e` and must still be emitted as
-    # its own component
+    # singletons: an endpoint no edge connects (a NULL, or a node seen only
+    # in self-loops) is its own component
     roots = (
-        edges.select(F.col(a_col).alias("u"))
-        .union(edges.select(F.col(b_col).alias("u")))
+        fork(pairs).select("u")
+        .union(fork(pairs).select(F.col("v").alias("u")))
         .distinct()
         .join(membership.select("node"), F.col("u") == F.col("node"), "left_anti")
         .select(F.col("u").alias("node"), F.col("u").alias("component"))
@@ -359,13 +375,16 @@ def pagerank(
     candidate representatives (reference picks by redirect target only,
     /root/reference/src/kb_loader/db_pedia.py:55-71; rank generalizes it).
 
-    Power iteration with dangling-mass redistribution. Everything stays
-    in the plan: per-iteration global scalars (dangling mass) are
-    1-row aggregates broadcast-crossjoined, never collected, so there is
-    no driver-side action inside the loop; lineage is cut per iteration
-    with localCheckpoint. Per iteration: one rank⋈edges shuffle on src
-    (edges pre-joined with out-degree once, checkpointed) + one groupBy
-    dst — the canonical 2-shuffle PR round, skew handled by AQE.
+    Power iteration with dangling-mass redistribution. Each node carries
+    a ``dangling`` flag (no out-edge), computed once with the node table.
+    The global scalars ride checkpoint jobs as observed aggregates: the
+    node count on the nodes checkpoint, and each round's dangling mass on
+    that round's rank checkpoint, which the next round reads as a
+    literal. So there is no driver-side action inside the loop and no
+    per-round anti-join or cross-join; lineage is cut per iteration with
+    localCheckpoint. Per iteration: one rank⋈edges shuffle on src (edges
+    pre-joined with out-degree once, checkpointed) + one groupBy dst —
+    the canonical 2-shuffle PR round, skew handled by AQE.
 
     Returns (node, rank) with rank scaled by N (average = 1.0, so a
     6-dp rounding keeps ~7 significant digits for oracle comparison).
@@ -376,19 +395,21 @@ def pagerank(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .distinct()
     )
-    nodes = checkpoint(
+    out_deg = fork(e).groupBy("src").agg(F.count("*").alias("deg"))
+    nodes, obs = checkpoint_observed(
         fork(e).select(F.col("src").alias("node"))
         .union(fork(e).select("dst"))
         .distinct()
+        .join(out_deg.withColumnRenamed("src", "node"), "node", "left")
+        .select("node", F.col("deg").isNull().alias("dangling")),
+        F.count(F.lit(1)).alias("n"),
+        F.count(F.when(F.col("dangling"), 1)).alias("d"),
     )
-    out_deg = fork(e).groupBy("src").agg(F.count("*").alias("deg"))
     deg_edges = checkpoint(fork(e).join(out_deg, "src"))
-    n_df = fork(nodes).agg(F.count("*").cast("double").alias("n"))
-    ranks = (
-        fork(nodes)
-        .crossJoin(F.broadcast(n_df))
-        .select("node", (F.lit(1.0) / F.col("n")).alias("rank"))
-    )
+    # an empty graph has no rank to compute; 1 keeps the literals finite
+    n = float(obs["n"] or 1)
+    ranks = fork(nodes).withColumn("rank", F.lit(1.0 / n))
+    dmass = obs["d"] * (1.0 / n)
     for _ in range(iters):
         r = fork(ranks)
         contribs = (
@@ -396,31 +417,26 @@ def pagerank(
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum(F.col("rank") / F.col("deg")).alias("contrib"))
         )
-        dangling = (
-            fork(ranks)
-            .join(fork(deg_edges).select("src").distinct(),
-                  F.col("node") == F.col("src"), "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dmass"))
-        )
-        ranks = checkpoint(
+        ranks, obs = checkpoint_observed(
             fork(nodes)
             .join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .crossJoin(F.broadcast(n_df))
             .select(
                 "node",
+                "dangling",
                 (
-                    F.lit(1.0 - damping) / F.col("n")
+                    F.lit((1.0 - damping) / n)
                     + damping
                     * (
                         F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + F.col("dmass") / F.col("n")
+                        + F.lit(dmass / n)
                     )
                 ).alias("rank"),
-            )
+            ),
+            F.coalesce(
+                F.sum(F.when(F.col("dangling"), F.col("rank"))), F.lit(0.0)
+            ).alias("dmass"),
         )
-    return (
-        fork(ranks)
-        .crossJoin(F.broadcast(n_df))
-        .select("node", F.round(F.col("rank") * F.col("n"), 6).alias("rank"))
+        dmass = obs["dmass"]
+    return fork(ranks).select(
+        "node", F.round(F.col("rank") * F.lit(n), 6).alias("rank")
     )

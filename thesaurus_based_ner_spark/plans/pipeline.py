@@ -4,8 +4,16 @@ Stages (each an Iceberg/parquet checkpoint with per-partition lineage,
 resumable by fingerprint — reference analog: md5-keyed buffer dirs,
 /root/reference/src/ner_model/typer/data_translator.py:463-483):
 
-  webtext → extract (byte-identity verified) → sentences → mentions
-          → linked mentions → canonical entities → triples
+  mentions   ← webtext: extract (byte-identity verified) → sentences → match
+  candidates ← anchor
+  canonical  ← anchor, redirects (redirect chains, then two-star CC)
+  linked     ← mentions, candidates
+  triples    ← linked, canonical, anchor
+
+run_pipeline schedules the stages by these edges, not in a line: the two
+anchor-side stages run on worker threads beside the match job, link waits
+for mentions and candidates only, and the triples write is the one stage
+that waits for canonical.
 
 Physical shape of the hot path (SURVEY.md §4), one fused job up to the
 mentions table:
@@ -245,24 +253,27 @@ def run_pipeline(
     # checkpoints.
     canon_fp = _fp(base_fp, canonical_salt)
 
-    # The DAG has two independent branches:
-    #   docs:  webtext → (extract → sentencize → match) → mentions
-    #   dims:  anchor  → candidates / canonical   (doc-count independent)
-    # Spark's scheduler runs concurrently-submitted jobs in parallel (FIFO
-    # across free task slots), so the dim branch is built on a side thread
-    # and its wall time hides entirely behind the doc branch — on a real
-    # cluster this is the difference between 7 serial barriers and the
-    # 4-deep critical path.
+    # The stage DAG (module docstring), run by its real dependencies:
+    # candidates and canonical each start on a worker of their own before
+    # the match job; Spark's scheduler runs concurrently-submitted jobs in
+    # parallel (FIFO across free task slots). The main thread links as
+    # soon as match and candidates are done — link never reads canonical —
+    # and waits for canonical only before materialize, so the
+    # canonicalize fixpoint hides behind match and link instead of
+    # holding link back. A failure in any branch raises from its
+    # future's result(); leaving the pool waits for the other branches.
     from concurrent.futures import ThreadPoolExecutor
 
-    def _dim_branch():
-        catalog.materialize(
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        candidates = pool.submit(
+            catalog.materialize,
             "candidates",
             lambda: candidate_table(anchor),
             fingerprint=base_fp,
             stage="candidates",
         )
-        catalog.materialize(
+        canonical = pool.submit(
+            catalog.materialize,
             "canonical",
             lambda: canonicalize_entities(
                 anchor, redirects, n_salt=canonical_salt
@@ -270,10 +281,6 @@ def run_pipeline(
             fingerprint=canon_fp,
             stage="canonicalize",
         )
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        dim_future = pool.submit(_dim_branch)
-
         # fused map prefix: one job, corpus read once, nothing
         # corpus-sized ever written
         catalog.materialize(
@@ -284,15 +291,17 @@ def run_pipeline(
             fingerprint=base_fp,
             stage="match",
         )
-        dim_future.result()  # surface dim-branch failures before linking
-
-    linked = catalog.materialize(
-        "linked",
-        lambda: link_mentions(catalog.read("mentions"), catalog.read("candidates")),
-        fingerprint=base_fp,
-        stage="link",
-    )
-    triples = catalog.materialize(
+        candidates.result()
+        catalog.materialize(
+            "linked",
+            lambda: link_mentions(
+                catalog.read("mentions"), catalog.read("candidates")
+            ),
+            fingerprint=base_fp,
+            stage="link",
+        )
+        canonical.result()
+    return catalog.materialize(
         "triples",
         lambda: triple_stage(
             catalog.read("linked"), catalog.read("canonical"), anchor
@@ -301,7 +310,6 @@ def run_pipeline(
         partition_by=["pred"],
         stage="materialize",
     )
-    return triples
 
 
 def verify_extraction(extracted: DataFrame) -> dict:

@@ -15,6 +15,35 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 64
 
 
+def host_driver_memory(
+    meminfo: str = "/proc/meminfo", cgroup_max: str = "/sys/fs/cgroup/memory.max"
+) -> str:
+    """Half of the memory this host (or its cgroup) allows, as a driver
+    heap size: at most 48g, at least 1g.
+
+    In local mode the driver JVM holds every executor's memory, and a
+    heap larger than the host turns memory pressure into the OS killing
+    the process instead of Spark spilling.
+    """
+    with open(meminfo) as f:
+        total = next(
+            int(line.split()[1]) * 1024 for line in f if line.startswith("MemTotal:")
+        )
+    try:
+        with open(cgroup_max) as f:
+            limit = f.read().strip()
+        if limit.isdigit():  # "max" means no cgroup limit
+            total = min(total, int(limit))
+    except OSError:
+        pass
+    return f"{max(1, min(48, total // 2 // 2**30))}g"
+
+
+def driver_memory() -> str:
+    """SPARK_DRIVER_MEMORY if set, else host_driver_memory()."""
+    return os.environ.get("SPARK_DRIVER_MEMORY") or host_driver_memory()
+
+
 def get_spark(
     app_name: str = "thesaurus_based_ner_spark",
     cpus: int | None = None,
@@ -59,7 +88,7 @@ def get_spark(
         # Deterministic timestamps vs DuckDB oracles.
         .config("spark.sql.session.timeZone", "UTC")
         # Local mode: driver is the only JVM.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Self-healing python workers: this sandbox sporadically kills

@@ -14,11 +14,14 @@ Scale shape: per batch, work is proportional to the batch (map-only
 prefix + one mention-sized shuffle); the replacement anti-join touches
 the mention store, which is ~1-3% of token volume. The final
 triple_stage is the same dim-heavy/broadcast plan the batch pipeline
-runs. Restart-safe at two levels: the stream checkpoint remembers which
+runs; the canonical entity map it joins is built on a worker thread while
+the stream drains. Restart-safe at two levels: the stream checkpoint remembers which
 files are done; the catalog swap never leaves a half-written table.
 """
 
 from __future__ import annotations
+
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -51,7 +54,6 @@ def incremental_kg(
     """Drain new/updated pages, refresh the KG, return the triples table."""
     cat = Catalog(spark, catalog_root)
     candidates = candidate_table(anchor)
-    canon = canonicalize_entities(anchor, redirects)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         ments = mention_stage(sentence_stage(extract_stage(batch_df)), term2label)
@@ -60,16 +62,21 @@ def incremental_kg(
             "linked_mentions", linked, ["url"], stage=f"link:e{epoch_id}"
         )
 
-    q = (
-        spark.readStream.schema(WEBTEXT_SCHEMA)
-        .parquet(webtext_dir)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    triples = triple_stage(cat.read("linked_mentions"), canon, anchor)
+    # canonicalize_entities runs its fixpoint's checkpoint jobs eagerly,
+    # and nothing reads it before triple_stage: it builds on a worker
+    # thread while the stream drains, as the dim stages do in run_pipeline
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        canon = pool.submit(canonicalize_entities, anchor, redirects)
+        q = (
+            spark.readStream.schema(WEBTEXT_SCHEMA)
+            .parquet(webtext_dir)
+            .writeStream.foreachBatch(process)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    triples = triple_stage(cat.read("linked_mentions"), canon.result(), anchor)
     return cat.write(
         "triples", triples, partition_by=["pred"], stage="materialize"
     )
