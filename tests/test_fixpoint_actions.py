@@ -18,6 +18,7 @@ from thesaurus_based_ner_spark.operators.graph import (
     pagerank,
     resolve_chains,
 )
+from thesaurus_based_ner_spark.operators.thesaurus import expand_disambiguation
 
 
 @pytest.fixture
@@ -113,6 +114,52 @@ def test_descendants_bfs_runs_no_collect(spark, collects):
     n, out = _run(collects, descendants_bfs, edges, roots)
     assert n == 0
     assert {r.node for r in out.collect()} == {1, 2, 3, 4, 5}
+
+
+def _disambiguation_reference(t2e, disamb):
+    """Every (term, entity) reachable through disamb, minus the srcs."""
+    nxt = {}
+    for s, d in disamb:
+        nxt.setdefault(s, set()).add(d)
+    out = set()
+    for term, ent in t2e:
+        seen, todo = {ent}, [ent]
+        while todo:
+            for d in nxt.get(todo.pop(), ()):
+                if d not in seen:
+                    seen.add(d)
+                    todo.append(d)
+        out |= {(term, x) for x in seen if x not in nxt}
+    return out
+
+
+@pytest.mark.parametrize(
+    "t2e, disamb",
+    [
+        # a chain of pages, and a term whose entity is no page
+        (
+            [("m", "M"), ("g", "G")],
+            [("M", "M1"), ("M", "M2"), ("M2", "M3"), ("M2", "M4")],
+        ),
+        # A <-> B is a cycle with one leaf C; D <-> E is a cycle with none
+        (
+            [("t1", "A"), ("t2", "D"), ("t3", "Z"), ("t4", "B")],
+            [("A", "B"), ("B", "A"), ("B", "C"), ("D", "E"), ("E", "D")],
+        ),
+    ],
+    ids=["chain", "cycle"],
+)
+def test_expand_disambiguation_runs_no_collect(spark, collects, t2e, disamb):
+    n, out = _run(
+        collects,
+        expand_disambiguation,
+        _pairs(spark, t2e, ("term", "entity"), "string"),
+        _pairs(spark, disamb, ("src", "dst"), "string"),
+    )
+    assert n == 0
+    rows = [tuple(r) for r in out.collect()]
+    assert len(rows) == len(set(rows))
+    assert set(rows) == _disambiguation_reference(t2e, disamb)
 
 
 def _pagerank_reference(edges, iters, damping):

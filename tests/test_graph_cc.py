@@ -60,6 +60,14 @@ def test_twostar_long_chain_converges_logarithmically(spark):
     assert out == {(i, 0) for i in range(n)}
 
 
+def test_twostar_fails_loud_past_max_iters(spark):
+    # a 16-node path needs more than one round to settle: with max_iters=1
+    # the component map has not converged, so it must raise, not return
+    e = _edges(spark, [(i, i + 1) for i in range(15)])
+    with pytest.raises(RuntimeError, match="max_iters"):
+        connected_components_twostar(e, max_iters=1)
+
+
 def test_twostar_handles_duplicate_and_reversed_edges(spark):
     e = _edges(spark, [(1, 2), (2, 1), (1, 2), (3, 2), (5, 4)])
     out = _result(connected_components_twostar(e))
@@ -243,14 +251,24 @@ def _ancestors(chain, max_depth):
     return ancestor_closure(chain, "child", "parent", max_depth=max_depth)
 
 
+def _disambiguation(chain, max_depth):
+    from thesaurus_based_ner_spark.operators.thesaurus import expand_disambiguation
+
+    t2e = chain.sparkSession.createDataFrame(
+        [("t", "n0")], "term string, entity string"
+    )
+    return expand_disambiguation(t2e, chain.toDF("src", "dst"), max_depth=max_depth)
+
+
 # (operator, rows of the full result, rounds the 6-edge chain needs):
 # descendants_bfs finds n1..n6 across 6 frontier expansions;
 # ancestor_closure starts from the edges themselves, so pair lengths 2..6
-# take 5 rounds (21 pairs + 7 self pairs)
+# take 5 rounds (21 pairs + 7 self pairs); expand_disambiguation follows
+# n0 through the same 6 hops and keeps only the leaf n6
 @pytest.mark.parametrize(
     "op, full, exact",
-    [(_descendants, 7, 6), (_ancestors, 28, 5)],
-    ids=["descendants_bfs", "ancestor_closure"],
+    [(_descendants, 7, 6), (_ancestors, 28, 5), (_disambiguation, 1, 6)],
+    ids=["descendants_bfs", "ancestor_closure", "expand_disambiguation"],
 )
 def test_descendants_bfs_fails_loud_past_max_depth(spark, op, full, exact):
     """ADVICE r4: a hierarchy deeper than max_depth must raise, not return

@@ -16,9 +16,10 @@ from thesaurus_based_ner_spark.sources.catalog import Catalog
 
 
 class _WriteToRecorder:
-    def __init__(self, calls, table):
+    def __init__(self, calls, table, df):
         self.calls = calls
         self.table = table
+        self.df = df
 
     def option(self, k, v):
         self.calls.append(("option", self.table, k, v))
@@ -30,6 +31,9 @@ class _WriteToRecorder:
 
     def createOrReplace(self):
         self.calls.append(("createOrReplace", self.table))
+        # run the plan into a noop sink, so the write's Observation is
+        # filled as a real table write would fill it
+        self.df.write.format("noop").mode("overwrite").save()
 
     def append(self):
         self.calls.append(("append", self.table))
@@ -65,15 +69,11 @@ def icat(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(
         concrete_df_cls,
         "writeTo",
-        lambda self, tbl: calls.append(("writeTo", tbl)) or _WriteToRecorder(calls, tbl),
+        lambda self, tbl: calls.append(("writeTo", tbl))
+        or _WriteToRecorder(calls, tbl, self),
         raising=False,
     )
 
-    class _NoObservation:  # Observation.get would block with a mocked write
-        def __init__(self, *a, **kw):
-            raise RuntimeError("disabled in mock")
-
-    monkeypatch.setattr(pyspark.sql, "Observation", _NoObservation, raising=False)
     monkeypatch.setattr(
         pyspark.sql.catalog.Catalog, "tableExists", lambda self, t: True, raising=False
     )
@@ -114,6 +114,7 @@ def test_iceberg_write_uses_v2_create_or_replace(spark, icat):
     assert out.columns == ["k", "v"]  # read-back via spark.table
     meta = cat._read_meta("triples")
     assert meta["stage"] == "s" and meta["partitions"] == []
+    assert meta["observed"] == {"rows": 3}
     # snapshot-id lineage: the head comes from the main-branch ref (random
     # snapshot ids are not monotonic, so committed_at ordering is only a
     # last resort — ADVICE r5), NOT from the .snapshots fallback

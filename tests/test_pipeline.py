@@ -125,6 +125,8 @@ def test_lineage_written(catalog, triples):
     assert stages == {"match", "candidates", "canonicalize", "link", "materialize"}
     for m in lin:
         assert m["rows_out"] == sum(p["rows"] for p in m["partitions"])
+        # the row counter observed on the write job agrees with the footers
+        assert m["observed"]["rows"] == m["rows_out"], m["stage"]
 
 
 def test_resume_skips_finished_stages(spark, catalog, triples):

@@ -6,8 +6,8 @@ docs described the two interchangeably. The policy is now explicit
 (session.py comment + SCALE.md "Round-7 resilience"):
 
 - LIBRARY sessions: 1800s, killOnIdleTimeout=true (conservative — job
-  profile unknown; ~100x worst observed per-batch stall). Overridable via
-  SPARK_GRAFT_WORKER_IDLE_S; "0" disables the kill entirely.
+  profile unknown; ~100x worst observed per-batch stall). A constant: a
+  caller that needs another value passes it through get_spark(extra_conf=).
 - BENCH/scaling sessions: bench.bench_idle_timeout_s(docs) — 600s floor,
   scaled with input size, capped at the 1800s library default (ADVICE r7:
   a fixed 600s override shrinks the safety margin at 16M+ docs).
@@ -27,20 +27,10 @@ def test_library_default_is_1800s_kill_on():
     from thesaurus_based_ner_spark import session
 
     src = inspect.getsource(session.get_spark)
-    # the documented conservative default, used unless the env override is set
-    assert 'os.environ.get("SPARK_GRAFT_WORKER_IDLE_S", "1800")' in src
-    assert "spark.python.worker.killOnIdleTimeout" in src
-
-
-def test_library_env_override_disable(monkeypatch):
-    # "0" must turn the kill OFF (relying on faulthandler + task retry),
-    # not set a 0-second timeout.
-    monkeypatch.setenv("SPARK_GRAFT_WORKER_IDLE_S", "0")
-    import os
-
-    idle_s = os.environ.get("SPARK_GRAFT_WORKER_IDLE_S", "1800")
-    kill = idle_s != "0"
-    assert kill is False
+    # one constant default, no env override: callers use extra_conf
+    assert '.config("spark.python.worker.idleTimeoutSeconds", "1800")' in src
+    assert '.config("spark.python.worker.killOnIdleTimeout", "true")' in src
+    assert "SPARK_GRAFT_WORKER_IDLE_S" not in src
 
 
 def test_bench_timeout_floor_is_600s_small_inputs():

@@ -1,14 +1,23 @@
 """Graph / hierarchy operators (SURVEY.md §2.7 G1-G6).
 
 Iterative DataFrame fixpoints with bounded depth + convergence checks,
-localCheckpoint every few rounds to cut lineage (SURVEY §7 "what's hard").
+localCheckpoint every round to cut lineage (SURVEY §7 "what's hard").
 All loops are driver-side control flow over distributed joins. A loop's
 convergence test reads an aggregate observed on the round's own checkpoint
-job (checkpoint_observed): no loop runs a driver action of its own.
+job (checkpoint_observed): no loop runs a driver action of its own, and
+no loop returns a result it has not seen converge — one that is still
+changing one round past its bound raises RuntimeError.
+
+The reachability fixpoints (ancestor_closure, descendants_bfs and
+thesaurus.expand_disambiguation) share one semi-naive loop, _semi_naive:
+each round expands only the previous round's new rows, so their outputs
+are distinct, and a cycle converges instead of spinning to the bound.
 
 Reference parity:
 - ancestor_closure    ← expand_tuis / expand_dbpedia_cats + tree ascendants
                         (/root/reference/src/dataset/utils.py:138-173,343-360)
+- descendants_bfs     ← GENIA get_descendants_cuis
+                        (reference src/dataset/term2cat/genia.py:46-71)
 - resolve_chains      ← redirect transitive closure until fixpoint
                         (/root/reference/src/kb_loader/db_pedia.py:55-71)
 - connected_components_twostar
@@ -18,6 +27,8 @@ Reference parity:
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -46,6 +57,52 @@ def _ensure_safe_optimizer(spark) -> None:
         )
 
 
+def _semi_naive(
+    seed: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    max_depth: int,
+    name: str,
+) -> DataFrame:
+    """Semi-naive reachability fixpoint: every row ``step`` reaches from
+    ``seed``, the seed included, each row once.
+
+    seed: a checkpointed frame of distinct rows. step: maps a frame with
+    the seed's columns to the rows one hop on, same columns. Each round
+    applies step to the previous round's new rows, keeps the distinct rows
+    no earlier round holds and checkpoints them; the new-row count rides
+    that checkpoint's job. Returns the lazy union of the rounds once a
+    round finds no new row. Raises RuntimeError rather than return a
+    truncated result when round max_depth + 1 still finds rows.
+
+    Every reference to a checkpointed frame goes through fork: mixing a
+    plan with its own checkpoint (shared expr ids) makes Spark 4.1's
+    localCheckpoint throw NoSuchElementException on plan attributes.
+    """
+    _ensure_safe_optimizer(seed.sparkSession)
+    rounds = [seed]
+
+    def _so_far() -> DataFrame:
+        out = fork(rounds[0])
+        for d in rounds[1:]:
+            out = out.unionByName(fork(d))
+        return out
+
+    for _ in range(max_depth + 1):
+        nxt, obs = checkpoint_observed(
+            step(fork(rounds[-1]))
+            .distinct()
+            .join(_so_far(), seed.columns, "left_anti"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        if obs["n"] == 0:
+            return _so_far()
+        rounds.append(nxt)
+    raise RuntimeError(
+        f"{name}: new rows still found after max_depth={max_depth} "
+        f"rounds; raise max_depth for this input"
+    )
+
+
 def ancestor_closure(
     edges: DataFrame,
     child_col: str = "child",
@@ -53,63 +110,29 @@ def ancestor_closure(
     include_self: bool = True,
     max_depth: int = 32,
 ) -> DataFrame:
-    """(node, ancestor) transitive closure of a DAG by iterative self-join.
+    """Distinct (node, ancestor) transitive closure by iterative self-join.
 
     Doubles the reachable depth per iteration is unnecessary for shallow
     ontologies (UMLS tree depth ≤ 9); we extend one level per round and stop
-    when no new pairs appear. include_self mirrors the reference's
-    get_ascendant_tuis which includes the node itself (utils.py:343-360).
-    Raises RuntimeError rather than return a truncated closure when the
-    hierarchy needs more than max_depth rounds.
+    when no new pairs appear, so a cycle converges too. include_self
+    mirrors the reference's get_ascendant_tuis which includes the node
+    itself (utils.py:343-360). Raises RuntimeError rather than return a
+    truncated closure when the hierarchy needs more than max_depth rounds.
     """
-    _ensure_safe_optimizer(edges.sparkSession)
     e = checkpoint(
         edges.select(
             F.col(child_col).alias("node"), F.col(parent_col).alias("ancestor")
         ).distinct()
     )
-    # closure is kept as a LIST of checkpointed deltas, unioned lazily:
-    # each delta is an RDD-scan plan so lineage stays flat. Only the
-    # CHECKPOINTED e is referenced below — mixing a plan with its own
-    # checkpoint (shared expr ids) makes Spark 4.1's localCheckpoint throw
-    # NoSuchElementException on plan attributes.
-    deltas = [e]
-    frontier = deltas[0]
 
-    def _closure_so_far() -> DataFrame:
-        out = fork(deltas[0])
-        for d in deltas[1:]:
-            out = out.unionByName(fork(d))
-        return out
-
-    def _expand(cur: DataFrame) -> tuple[DataFrame, int]:
-        """(new pairs, how many) — the count rides the checkpoint job."""
-        nxt, obs = checkpoint_observed(
-            fork(cur).alias("f")
+    def step(f: DataFrame) -> DataFrame:
+        return (
+            f.alias("f")
             .join(fork(e).alias("e"), F.col("f.ancestor") == F.col("e.node"))
             .select(F.col("f.node"), F.col("e.ancestor"))
-            .distinct()
-            .join(_closure_so_far(), ["node", "ancestor"], "left_anti"),
-            F.count(F.lit(1)).alias("n"),
         )
-        return nxt, obs["n"]
 
-    converged = False
-    for _ in range(max_depth):
-        nxt, n_new = _expand(frontier)
-        if n_new == 0:
-            converged = True
-            break
-        deltas.append(nxt)
-        frontier = nxt
-    # same contract as descendants_bfs: one extra expansion tells "done on
-    # the last round" from "truncated", and a truncated closure raises
-    if not converged and _expand(frontier)[1] != 0:
-        raise RuntimeError(
-            f"ancestor_closure: new pairs still found after max_depth="
-            f"{max_depth} rounds; raise max_depth for this hierarchy"
-        )
-    closure = _closure_so_far()
+    closure = _semi_naive(e, step, max_depth, "ancestor_closure")
     if include_self:
         nodes = (
             fork(e).select("node")
@@ -137,61 +160,26 @@ def descendants_bfs(
     Unlike ancestor_closure (all-pairs closure), only the reachable SET
     propagates — per-round state is O(|reachable|), and each round is one
     equi-join on the frontier. edges: (parent_col, child_col) rows;
-    roots: 1-column frame of start nodes. Returns 1-column `node`.
+    roots: 1-column frame of start nodes. Returns the distinct reachable
+    nodes as 1-column `node`; a cycle converges. Raises RuntimeError
+    rather than return a truncated set when the frontier is still
+    non-empty after max_depth rounds.
     """
-    _ensure_safe_optimizer(edges.sparkSession)
     e = checkpoint(
         edges.select(
             F.col(parent_col).alias("parent"), F.col(child_col).alias("child")
         ).distinct()
     )
-    seen = [checkpoint(roots.toDF("node").distinct())]
-    frontier = seen[0]
 
-    def _seen() -> DataFrame:
-        out = fork(seen[0])
-        for d in seen[1:]:
-            out = out.unionByName(fork(d))
-        return out
-
-    def _expand(cur: DataFrame) -> tuple[DataFrame, int]:
-        """(newly reached nodes, how many) — the count rides the
-        checkpoint job."""
-        nxt, obs = checkpoint_observed(
-            fork(cur).alias("f")
+    def step(f: DataFrame) -> DataFrame:
+        return (
+            f.alias("f")
             .join(fork(e).alias("e"), F.col("f.node") == F.col("e.parent"))
             .select(F.col("e.child").alias("node"))
-            .distinct()
-            .join(_seen(), ["node"], "left_anti"),
-            F.count(F.lit(1)).alias("n"),
         )
-        return nxt, obs["n"]
 
-    converged = False
-    for _ in range(max_depth):
-        nxt, n_new = _expand(frontier)
-        if n_new == 0:
-            converged = True
-            break
-        seen.append(nxt)
-        frontier = nxt
-    if not converged:
-        # A hierarchy of depth exactly max_depth discovers its last layer
-        # on the final iteration and exits with converged=False even
-        # though the closure is complete (ADVICE r5) — one extra
-        # expansion distinguishes "done on the last round" from
-        # "genuinely truncated".
-        converged = _expand(frontier)[1] == 0
-    if not converged:
-        # ADVICE r4: the reference (get_descendants_cuis, genia.py:46-71)
-        # iterates until the frontier empties — returning a silently
-        # truncated closure on a deeper-than-max_depth hierarchy would
-        # quietly lose descendants. Fail loud like an unconverged fixpoint.
-        raise RuntimeError(
-            f"descendants_bfs: frontier still non-empty after max_depth="
-            f"{max_depth} rounds; raise max_depth for this hierarchy"
-        )
-    return _seen()
+    seed = checkpoint(roots.toDF("node").distinct())
+    return _semi_naive(seed, step, max_depth, "descendants_bfs")
 
 
 def resolve_chains(
@@ -255,7 +243,8 @@ def connected_components_twostar(
     checkpoints. Convergence compares a signature (count + xor of row
     hashes) observed on the small-star checkpoint's own job with the
     previous round's: a round costs no signature job and no driver
-    anti-join.
+    anti-join. Raises RuntimeError rather than return an unconverged map
+    when round max_iters + 1 still changes the edge set.
 
     large-star: every neighbor v > u re-points at m(u) = min(N(u) ∪ {u});
     small-star: every neighbor v ≤ u (and u itself) points at m(u).
@@ -290,7 +279,7 @@ def connected_components_twostar(
             "u", F.least("__mv", "u").alias("m")
         )
 
-    for _ in range(max_iters):
+    for _ in range(max_iters + 1):
         sym = cur.union(cur.select(F.col("v").alias("u"), F.col("u").alias("v")))
         mn = _min_nbr(sym)
         # large-star: (v, m(u)) for v ∈ N(u), v > u
@@ -318,6 +307,11 @@ def connected_components_twostar(
         if new_sig == sig:
             break
         sig = new_sig
+    else:
+        raise RuntimeError(
+            f"connected_components_twostar: edges still changing after "
+            f"max_iters={max_iters} rounds; raise max_iters for this graph"
+        )
     # fixpoint: (u, v) edges point nodes at their component min
     membership = cur.select(F.col("u").alias("node"), F.col("v").alias("component"))
     # singletons: an endpoint no edge connects (a NULL, or a node seen only

@@ -117,25 +117,27 @@ def expand_disambiguation(
     chains of disambiguation pages are followed to the leaves).
 
     term2entity: (term, entity); disamb: (src, dst) one-to-many edges.
-    Output: (term, entity) with every src replaced by its leaf targets.
+    Output: distinct (term, entity) rows: every (term, entity) pair
+    reachable through disamb, minus each entity that is itself a src. So
+    only leaves remain, and a cycle of disambiguation pages converges and
+    contributes no rows. Raises RuntimeError rather than return a
+    truncated expansion when a chain is longer than max_depth.
     """
-    from thesaurus_based_ner_spark.operators.checkpoint import checkpoint
+    from thesaurus_based_ner_spark.operators.checkpoint import checkpoint, fork
+    from thesaurus_based_ner_spark.operators.graph import _semi_naive
 
-    srcs = disamb.select(F.col("src").alias("entity")).distinct()
-    cur = term2entity
-    for _ in range(max_depth):
-        ambiguous = checkpoint(cur.join(srcs, "entity", "left_semi"))
-        # 1-row count aggregate (checkpointed input, so the expansion
-        # below reuses the materialization) — no isEmpty in the loop
-        if ambiguous.agg(F.count("*").alias("n")).collect()[0]["n"] == 0:
-            break
-        resolved = cur.join(srcs, "entity", "left_anti")
-        expanded = (
-            ambiguous.join(disamb, ambiguous["entity"] == disamb["src"])
-            .select("term", F.col("dst").alias("entity"))
+    d = checkpoint(disamb.select("src", "dst").distinct())
+
+    def step(f: DataFrame) -> DataFrame:
+        g = fork(d)
+        return f.join(g, f["entity"] == g["src"]).select(
+            "term", F.col("dst").alias("entity")
         )
-        cur = checkpoint(resolved.unionByName(expanded).distinct())
-    return cur
+
+    seed = checkpoint(term2entity.select("term", "entity").distinct())
+    reach = _semi_naive(seed, step, max_depth, "expand_disambiguation")
+    srcs = fork(d).select(F.col("src").alias("entity"))
+    return reach.join(srcs, "entity", "left_anti").select("term", "entity")
 
 
 def merge_redirected_entity_cats(

@@ -66,11 +66,6 @@ def get_spark(
     master = f"local[{cpus},4]" if cpus and cpus > 0 else "local[*,4]"
     if shuffle_partitions is None:
         shuffle_partitions = max(DEFAULT_SHUFFLE_PARTITIONS, (cpus or 32) * 2)
-    # See the two-tier timeout policy comment below; "0" disables the kill.
-    idle_s = os.environ.get("SPARK_GRAFT_WORKER_IDLE_S", "1800")
-    kill_on_idle = idle_s != "0"
-    if not kill_on_idle:
-        idle_s = "1800"
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -107,19 +102,18 @@ def get_spark(
         #   engine's worst observed per-batch worker stall. A legitimately
         #   long single batch (e.g. a heavily skewed applyInPandas
         #   partition at large inputs) that idles the worker socket for
-        #   >30 min is the caller's cue to SALT the key or set
-        #   SPARK_GRAFT_WORKER_IDLE_S (0 disables the kill entirely,
-        #   leaving faulthandler + task retry as the recovery path).
+        #   >30 min is the caller's cue to SALT the key or pass a longer
+        #   spark.python.worker.idleTimeoutSeconds through extra_conf
+        #   (killOnIdleTimeout=false disables the kill entirely, leaving
+        #   faulthandler + task retry as the recovery path).
         # - BENCH/scaling sessions: bench.bench_idle_timeout_s(docs) —
         #   600s floor scaled with input size, capped at this 1800s —
         #   because the bench job profile is known (heaviest batch is
         #   seconds at 100k docs) and a wedged scaling rep should
-        #   self-heal in minutes, not at the 3.7h subprocess cap.
-        .config("spark.python.worker.idleTimeoutSeconds", idle_s)
-        .config(
-            "spark.python.worker.killOnIdleTimeout",
-            "true" if kill_on_idle else "false",
-        )
+        #   self-heal in minutes, not at the 3.7h subprocess cap; it
+        #   passes its value through extra_conf, which overrides this one.
+        .config("spark.python.worker.idleTimeoutSeconds", "1800")
+        .config("spark.python.worker.killOnIdleTimeout", "true")
         # ContextCleaner only reclaims dropped localCheckpoint / broadcast
         # blocks when a driver GC collects their weak refs, and its
         # fallback periodic GC defaults to 30 MIN — so a long multi-query

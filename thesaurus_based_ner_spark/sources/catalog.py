@@ -24,7 +24,7 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 
 class Catalog:
@@ -120,20 +120,12 @@ class Catalog:
         t0 = time.time()
         # A9 per-stage counter metrics: an Observation rides the write job
         # itself (no extra action) and lands in the lineage sidecar.
-        obs = None
-        try:
-            from pyspark.sql import Observation, functions as F
-
-            obs = Observation(f"obs_{name}_{int(t0 * 1000)}")
-            df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        except Exception:
-            obs = None
+        obs = Observation(f"obs_{name}_{int(t0 * 1000)}")
+        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
         if sort_by:
             df = df.sortWithinPartitions(*sort_by)
         if self.use_iceberg:
             # Iceberg backend: namespaced table, snapshot = lineage anchor.
-            from pyspark.sql import functions as F
-
             wt = df.writeTo(self._table(name))
             if max_records_per_file:
                 wt = wt.option("maxRecordsPerFile", str(max_records_per_file))
@@ -166,13 +158,7 @@ class Catalog:
             # this stage produced, so downstream readers / incremental
             # refresh can time-travel or diff against it.
             meta["snapshot_id"] = self._iceberg_snapshot_id(name)
-        if obs is not None:
-            try:
-                meta["observed"] = {
-                    k: v for k, v in obs.get.items() if k == "rows"
-                }
-            except Exception:
-                pass
+        meta["observed"] = {"rows": obs.get["rows"]}
         with open(self._meta_path(name), "w") as f:
             json.dump(meta, f, indent=1)
         return self.read(name)
@@ -272,8 +258,6 @@ class Catalog:
         overwritten in the same job (Spark cannot overwrite a path it is
         scanning), and a crash mid-upsert leaves the old table intact.
         """
-        from pyspark.sql import functions as F
-
         # incoming duplicates on the keys (a crawl batch re-fetching one
         # url twice) would make the parquet path keep both rows and the
         # Iceberg MERGE throw a cardinality violation — dedupe up front,
