@@ -8,6 +8,10 @@ from thesaurus_based_ner_spark.session import get_spark
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("tests", cpus=8, shuffle_partitions=8)
+    # a stage whose generated code does not compile (e.g. a method past
+    # the JVM's 64 KB limit) fails the test instead of silently running
+    # on the slower non-codegen path
+    s.conf.set("spark.sql.codegen.fallback", "false")
     yield s
 
 

@@ -112,6 +112,43 @@ def test_ivf_recall_and_determinism(spark, sf_dir):
     assert recall >= 0.5, f"IVF recall too low: {recall}"
 
 
+def test_unrolled_cosine_is_bitwise_the_fold(spark):
+    """The fixed-dim cosine (one unrolled `_dot` per sum) equals a plain
+    left-to-right fold bit for bit, and a zero vector scores 0, not NaN.
+    `embedding_neardup_pairs` takes its norms from a per-row `_dot` and
+    must score every candidate exactly as `_cos` does."""
+    import math
+    import random
+
+    from thesaurus_based_ner_spark.operators import dedup
+
+    rng = random.Random(5)
+    vecs = [[rng.uniform(-1, 1) for _ in range(64)] for _ in range(40)]
+    vecs.append([0.0] * 64)
+    rows = [(i, v, vecs[(i + 1) % len(vecs)]) for i, v in enumerate(vecs)]
+    df = spark.createDataFrame(rows, "id int, a array<double>, b array<double>")
+
+    def fold(x, y):
+        acc = 0.0
+        for u, v in zip(x, y):
+            acc += u * v
+        return acc
+
+    for r in df.select("id", "a", "b", simsearch._cos("a", "b", 64).alias("c")).collect():
+        nn = fold(r.a, r.a) * fold(r.b, r.b)
+        want = fold(r.a, r.b) / math.sqrt(nn) if nn > 0 else 0.0
+        assert r.c == want, (r.id, r.c, want)
+
+    pairs = dedup.embedding_neardup_pairs(df, "id", "a", threshold=-1.0)
+    va = df.select(F.col("id").alias("a_id"), F.col("a").alias("ea"))
+    vb = df.select(F.col("id").alias("b_id"), F.col("a").alias("eb"))
+    ref = pairs.join(va, "a_id").join(vb, "b_id").select(
+        "cos", F.round(simsearch._cos("ea", "eb"), 6).alias("ref")
+    )
+    got = ref.collect()
+    assert got and all(r.cos == r.ref for r in got)
+
+
 def test_np_chunker_parity_with_rule_chunker(spark):
     """chunker="np" (iterator-init mapInPandas, POS-lite model) must equal
     the pure-SQL rule chunker on the fixture corpus — the two strategies

@@ -247,7 +247,34 @@ def test_ngram_jaccard_no_postagg_size_joins(spark, sf_dir):
         for j in ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin")
     )
     assert joins == 1, f"size joins must be gone: {ops}"
-    assert "REPARTITION_BY_NUM" in plan, "pair agg must shuffle raw rows"
+    # key-only repartition: below both aggregates, and AQE may coalesce it
+    assert "REPARTITION_BY_COL" in plan, "pair agg must shuffle raw rows"
+    assert "REPARTITION_BY_NUM" not in plan, "a fixed count AQE never sizes"
+
+
+def test_entity_pagerank_stages_follow_aqe(spark, sf_dir):
+    """The pre-distinct edge repartition names keys only, so AQE coalesces
+    it on small inputs: with 64 shuffle partitions no stage of the query
+    runs 64 tasks. A fixed-count repartition ran 64 and 128 per stage, and
+    every stage scanning pagerank's checkpointed frames inherited them."""
+    sc = spark.sparkContext
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    group = "test-entity-pagerank-tasks"
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
+    sc.setJobGroup(group, group)
+    try:
+        entrymod.queries()["entity_pagerank"](spark, sf_dir).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    tracker = sc.statusTracker()
+    tasks = {
+        sid: tracker.getStageInfo(sid).numTasks
+        for jid in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(jid).stageIds
+        if tracker.getStageInfo(sid) is not None
+    }
+    assert tasks and max(tasks.values()) < 64, tasks
 
 
 @pytest.mark.parametrize(

@@ -83,8 +83,10 @@ def ngram_jaccard_pairs(
     #    aggregate passes (raw 16-byte rows), so the tables shrink to
     #    per-reduce-partition size — the "skip partial aggregation" shape
     #    (guide §2.3: aggregate before shuffle only when it reduces).
-    #    Partition count = the session's shuffle partitions (scale-
-    #    adaptive via conf, not a local constant).
+    #    The repartition names keys only (REPARTITION_BY_COL), so AQE
+    #    sizes it: at real scale it keeps the shuffle-partition count, on
+    #    small inputs it coalesces (a fixed count, REPARTITION_BY_NUM, is
+    #    never coalesced and ran 64 near-empty tasks per stage).
     toks = df.select(F.col(id_col).alias("id"), _tokens(text_col).alias("__toks"))
     # checkpoint the PER-DOC shingle arrays, not the exploded rows: a
     # combined select(size(set), explode(set)) lets CollapseProject inline
@@ -117,9 +119,8 @@ def ngram_jaccard_pairs(
             F.col("b.n").alias("nb"),
         )
     )
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     inter = (
-        pairs.repartition(n_part, "a_id", "b_id")
+        pairs.repartition("a_id", "b_id")
         .groupBy("a_id", "b_id", "na", "nb")
         .agg(F.count("*").alias("inter"))
     )
@@ -386,6 +387,7 @@ def embedding_neardup_pairs(
     plane literals (plans/queries.dedup_embedding).
     """
     from thesaurus_based_ner_spark.operators.simsearch import (
+        _dot,
         _hyperplane_weights,
         bucket_col,
     )
@@ -393,11 +395,21 @@ def embedding_neardup_pairs(
     base = df.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("e")
     )
+    # squared norm once per vector, not once per candidate pair: the
+    # verify stage then folds only the 64-term dot, which keeps its
+    # generated method under the JVM's 64 KB limit (three unrolled folds
+    # overflowed it and whole-stage codegen fell back). Same left-
+    # associated fold as simsearch._cos, so the score is bit-identical.
+    base = base.withColumn("sq", _dot("e", "e", dim))
     buckets = None
     for t in range(n_tables):
         planes = _hyperplane_weights(dim, n_bits, seed + 1000 * t)
         b = base.select(
-            "id", "e", F.lit(t).alias("table"), bucket_col("e", planes).alias("bucket")
+            "id",
+            "e",
+            "sq",
+            F.lit(t).alias("table"),
+            bucket_col("e", planes).alias("bucket"),
         )
         buckets = b if buckets is None else buckets.unionByName(b)
     # self-joined below: materialize so the hyperplane projections (384
@@ -405,7 +417,6 @@ def embedding_neardup_pairs(
     buckets = checkpoint(buckets)
     a = buckets.alias("a")
     b = buckets.alias("b")
-    from thesaurus_based_ner_spark.operators.simsearch import _cos
 
     # Score-then-distinct (r9, guide §2.3/§2.4): cos is a pure function of
     # the pair, so filtering BEFORE the distinct is value-identical — and it
@@ -427,9 +438,14 @@ def embedding_neardup_pairs(
         F.col("b.id").alias("b_id"),
         F.col("a.e").alias("ea"),
         F.col("b.e").alias("eb"),
+        (F.col("a.sq") * F.col("b.sq")).alias("nn"),
     )
+    # simsearch._cos's zero-norm guard, with the norms precomputed
+    cos = F.when(
+        F.col("nn") > 0, _dot("ea", "eb", dim) / F.sqrt("nn")
+    ).otherwise(F.lit(0.0))
     return (
-        cands.withColumn("cos", F.round(_cos("ea", "eb", dim), 6))
+        cands.withColumn("cos", F.round(cos, 6))
         .filter(F.col("cos") >= threshold)
         .select("a_id", "b_id", "cos")
         .dropDuplicates(["a_id", "b_id", "cos"])

@@ -18,34 +18,48 @@ import hashlib
 from pyspark.sql import DataFrame, Window, functions as F
 
 
+def _dot(a: str, b: str, dim: int):
+    """Dot product of two array<double> columns, UNROLLED to `dim` terms.
+
+    Higher-order-function lambdas run interpreted (SCALE.md); the unrolled
+    chain is plain codegen arithmetic, left-associated exactly like the
+    fold, so the IEEE-754 result is bit-identical to the HOF form and to
+    DuckDB's sequential list ops. `_dot(a, a, dim)` is the squared norm.
+
+    The chain is written as one SQL expression string: the JVM parses it in
+    a single call into the same expression tree a term-by-term Column
+    build gives (`0.0D` is the double literal `F.lit(0.0)`), while that
+    build costs one py4j round trip per operator — about 2 s of driver
+    time per 64-dim cosine on a 4-core host.
+    """
+    terms = [f"`{a}`[{i}] * `{b}`[{i}]" for i in range(dim)]
+    return F.expr(" + ".join(["0.0D"] + terms))
+
+
 def _cos(a: str, b: str, dim: int | None = None):
     """Cosine similarity between two array<double> columns.
 
-    With `dim` given, the dot/norm sums are UNROLLED into plain codegen
-    arithmetic — higher-order-function lambdas run interpreted (SCALE.md)
-    and dominated every embedding operator. The unrolled chain is
-    left-associated exactly like the fold, so the IEEE-754 result is
-    bit-identical to the HOF form and to DuckDB's sequential list ops —
-    oracle parity is preserved. Falls back to the HOF form for unknown
-    dims.
+    With `dim` given, the dot and both norms are the one unrolled `_dot`
+    fold — bit-identical to the HOF form, so oracle parity is preserved.
+    Falls back to the HOF form for unknown dims. Each unrolled term adds
+    bytecode to the consuming stage's generated method: three folds at
+    dim 64 already push a join's consume method past the JVM's 64 KB
+    method limit (whole-stage codegen then falls back to the slower
+    per-operator path). Where one side is reused across many pairs,
+    compute its squared norm once per row with `_dot` and fold only the
+    per-pair dot, as `dedup.embedding_neardup_pairs` does.
     """
     if dim is not None:
-        dot, na, nb = F.lit(0.0), F.lit(0.0), F.lit(0.0)
-        for i in range(dim):
-            x = F.col(a).getItem(i)
-            y = F.col(b).getItem(i)
-            dot = dot + x * y
-            na = na + x * x
-            nb = nb + y * y
-        # zero-norm guard: NaN outranks every real score under Spark's
-        # NaN-greatest ordering AND passes >= threshold filters — a
-        # zero embedding must score 0, not win top-k
-        return F.when(na * nb > 0, dot / F.sqrt(na * nb)).otherwise(F.lit(0.0))
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    na = F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x)
-    nb = F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x * x)
+        dot, na, nb = _dot(a, b, dim), _dot(a, a, dim), _dot(b, b, dim)
+    else:
+        dot = F.aggregate(
+            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+        )
+        na = F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x)
+        nb = F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x * x)
+    # zero-norm guard: NaN outranks every real score under Spark's
+    # NaN-greatest ordering AND passes >= threshold filters — a
+    # zero embedding must score 0, not win top-k
     return F.when(na * nb > 0, dot / F.sqrt(na * nb)).otherwise(F.lit(0.0))
 
 
