@@ -23,6 +23,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from bench import SF_DIR  # noqa: E402
+from thesaurus_based_ner_spark.plans.queries import QUERIES  # noqa: E402
 
 PLAN_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans")
 
@@ -39,21 +40,11 @@ def _spark():
     })
 
 
-def _queries():
-    from thesaurus_based_ner_spark.plans import queries_ext  # noqa: F401
-    from thesaurus_based_ner_spark.plans import queries_r3  # noqa: F401
-    from thesaurus_based_ner_spark.plans import queries_r4  # noqa: F401
-    from thesaurus_based_ner_spark.plans.queries import QUERIES
-
-    return QUERIES
-
-
 def cmd_time(names: list[str]) -> None:
     spark = _spark()
-    qs = _queries()
     out = {}
     for name in names:
-        fn = qs[name]
+        fn = QUERIES[name]
         spark.sparkContext.setJobDescription(f"bench_extra: {name}")
         walls = []
         for _ in range(2):
@@ -75,9 +66,8 @@ def cmd_plan(names: list[str]) -> None:
     tag = os.environ.get("PLAN_TAG", "now")
     os.makedirs(PLAN_DIR, exist_ok=True)
     spark = _spark()
-    qs = _queries()
     for name in names:
-        df = qs[name](spark, SF_DIR)
+        df = QUERIES[name](spark, SF_DIR)
         plan = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"

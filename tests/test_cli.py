@@ -32,6 +32,21 @@ def test_cli_pipeline_and_query(spark, tmp_path, capsys):
     assert rc == 2
 
 
+def test_cli_lists_every_registered_query(capsys):
+    assert main(["list"]) == 0
+    names = [ln.split("\t")[0] for ln in capsys.readouterr().out.splitlines()]
+    assert len(names) == 101
+    assert {"span_markup_diff", "genia_descendant_cats"} <= set(names)
+
+
+def test_cli_runs_a_late_registered_query(spark, sf_dir, tmp_path, capsys):
+    rc = main(["query", "--name", "span_markup_diff", "--sf-dir", sf_dir,
+               "--output", str(tmp_path / "markup")])
+    assert rc == 0
+    q = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert q["query"] == "span_markup_diff"
+
+
 def test_cli_pipeline_with_tsv_thesaurus(spark, tmp_path, capsys):
     """--thesaurus terms.tsv loads DISTRIBUTED (parallel CSV scan → the
     DataFrame dim path), never a driver dict."""

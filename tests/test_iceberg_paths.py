@@ -21,10 +21,6 @@ class _WriteToRecorder:
         self.table = table
         self.df = df
 
-    def option(self, k, v):
-        self.calls.append(("option", self.table, k, v))
-        return self
-
     def partitionedBy(self, *cols):
         self.calls.append(("partitionedBy", self.table, len(cols)))
         return self
@@ -103,12 +99,9 @@ def test_iceberg_write_uses_v2_create_or_replace(spark, icat):
     cat, calls, sqls = icat
     assert any("CREATE NAMESPACE" in q for q in sqls)  # __init__ branch
     df = spark.range(3).selectExpr("CAST(id AS INT) AS k", "'x' AS v")
-    out = cat.write(
-        "triples", df, partition_by=["k"], max_records_per_file=1000, stage="s"
-    )
+    out = cat.write("triples", df, partition_by=["k"], stage="s")
     table = f"{cat.namespace}.triples"
     assert ("writeTo", table) in calls
-    assert ("option", table, "maxRecordsPerFile", "1000") in calls
     assert ("partitionedBy", table, 1) in calls
     assert ("createOrReplace", table) in calls
     assert out.columns == ["k", "v"]  # read-back via spark.table

@@ -155,26 +155,6 @@ def test_fingerprint_invalidation(spark, catalog):
     assert catalog.exists("mentions")
 
 
-def test_write_respects_file_sizing_and_sort_layout(spark, tmp_path):
-    import glob
-
-    from thesaurus_based_ner_spark.sources.catalog import Catalog
-
-    cat = Catalog(spark, str(tmp_path / "cat"))
-    df = spark.range(0, 10_000, 1, 2).withColumnRenamed("id", "k")
-    cat.write("sized", df, max_records_per_file=1000, sort_by=["k"])
-    files = glob.glob(str(tmp_path / "cat" / "sized" / "*.parquet"))
-    # 10k rows / cap 1000 -> at least 10 files, none over the cap
-    assert len(files) >= 10
-    for f in files:
-        pf = spark.read.parquet(f)
-        rows = [r.k for r in pf.collect()]
-        assert len(rows) <= 1000
-        assert rows == sorted(rows)  # sortWithinPartitions layout held
-    back = cat.read("sized")
-    assert back.count() == 10_000
-
-
 def test_upsert_replaces_matched_keys_and_appends_new(spark, tmp_path):
     from pyspark.sql import functions as F
 

@@ -119,8 +119,6 @@ def cmd_pipeline(args) -> int:
 
 def cmd_query(args) -> int:
     spark = _get_session(args)
-    from thesaurus_based_ner_spark.plans import queries_ext as _qx  # noqa: F401
-    from thesaurus_based_ner_spark.plans import queries_r3 as _q3  # noqa: F401
     from thesaurus_based_ner_spark.plans.queries import QUERIES
 
     if args.name not in QUERIES:
@@ -142,8 +140,6 @@ def cmd_query(args) -> int:
 
 
 def cmd_list(args) -> int:
-    from thesaurus_based_ner_spark.plans import queries_ext as _qx  # noqa: F401
-    from thesaurus_based_ner_spark.plans import queries_r3 as _q3  # noqa: F401
     from thesaurus_based_ner_spark.plans.queries import ORACLES, QUERIES
 
     for name in sorted(QUERIES):

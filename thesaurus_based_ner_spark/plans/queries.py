@@ -20,13 +20,29 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from thesaurus_based_ner_spark.functions.text import TOKEN_RE
 from thesaurus_based_ner_spark.functions import url as url_fns
-from thesaurus_based_ner_spark.operators import dedup, graph, temporal, textstats
+from thesaurus_based_ner_spark.operators import (
+    dedup,
+    graph,
+    simsearch,
+    temporal,
+    textstats,
+)
+from thesaurus_based_ner_spark.operators.canonicalize import (
+    _surface_skew_stats,
+    canonicalize_entities,
+    choose_canonical_salt,
+)
+from thesaurus_based_ner_spark.operators.chunking import (
+    CHUNK_STOP,
+    chunks_df,
+    rule_chunks_df,
+    type_chunks_suffix,
+)
 from thesaurus_based_ner_spark.operators.mentions import (
     detect_mentions_df,
     detect_mentions_trie,
-    merge_adjacent_df,
+    detect_mentions_trie_dist,
     resolve_overlaps_df,
     thesaurus_with_case,
     tokenize_df,
@@ -66,6 +82,20 @@ def spread(df: DataFrame) -> DataFrame:
     if len(df.inputFiles()) < target:
         return df.repartition(target)
     return df
+
+
+def _doc_tokens(spark, sf_dir) -> DataFrame:
+    docs = spread(T(spark, sf_dir, "documents").select("doc_id", "text"))
+    return tokenize_df(docs, "text").select("doc_id", "tokens")
+
+
+def _en_doc_tokens(spark, sf_dir) -> DataFrame:
+    """(doc_id, tokens) of the English documents; the lang filter sits
+    below the spread so it reaches the scan."""
+    docs = spread(T(spark, sf_dir, "documents").filter(F.col("lang") == "en"))
+    return tokenize_df(docs.select("doc_id", "text"), "text").select(
+        "doc_id", "tokens"
+    )
 
 
 # DECIMAL-exact money sum → DOUBLE (order-independent across engines)
@@ -1042,10 +1072,7 @@ _MENTION_CTE = f"""
 
 
 def _doc_mentions(spark, sf_dir):
-    docs = spread(T(spark, sf_dir, "documents").filter(F.col("lang") == "en"))
-    snts = tokenize_df(docs.select("doc_id", "text"), "text").select(
-        "doc_id", "tokens"
-    )
+    snts = _en_doc_tokens(spark, sf_dir)
     th = thesaurus_with_case(spark, dict(DOC_THESAURUS))
     return detect_mentions_df(snts, th, ["doc_id"])
 
@@ -1518,10 +1545,6 @@ def canonical_components_star(spark, sf_dir):
     for connected components), then two-star CC. The oracle states clique
     semantics with a recursive CTE, so the star rewrite must be
     CC-equivalent to pass the value hash."""
-    from thesaurus_based_ner_spark.operators.canonicalize import (
-        canonicalize_entities,
-    )
-
     p = T(spark, sf_dir, "part")
     words = F.split("p_name", " ")
     anchor = p.select(
@@ -1571,11 +1594,6 @@ def auto_salt_decision(spark, sf_dir):
     heuristic itself runs; the salt formula (smallest power of two that
     bounds the hot key to 4 median partitions, clamped to 256) is stated
     twice — here and in SQL — so a drift in either fails the value hash."""
-    from thesaurus_based_ner_spark.operators.canonicalize import (
-        _surface_skew_stats,
-        choose_canonical_salt,
-    )
-
     p = T(spark, sf_dir, "part")
     words = F.split("p_name", " ")
     anchor = p.select(
@@ -1596,13 +1614,6 @@ def auto_salt_decision(spark, sf_dir):
 # Chunker + suffix-typer path (U2/U3: the reference's TwoStage default) and
 # the LSH ANN scale path.
 # ---------------------------------------------------------------------------
-
-from thesaurus_based_ner_spark.operators.chunking import (  # noqa: E402
-    CHUNK_STOP,
-    rule_chunks_df,
-    type_chunks_suffix,
-)
-from thesaurus_based_ner_spark.operators import simsearch  # noqa: E402
 
 _STOP_LIST_SQL = ", ".join(f"'{w}'" for w in CHUNK_STOP)
 
@@ -1659,10 +1670,7 @@ _STOP_LIST_SQL = ", ".join(f"'{w}'" for w in CHUNK_STOP)
     """,
 )
 def chunked_mentions(spark, sf_dir):
-    docs = spread(T(spark, sf_dir, "documents").filter(F.col("lang") == "en"))
-    snts = tokenize_df(docs.select("doc_id", "text"), "text").select(
-        "doc_id", "tokens"
-    )
+    snts = _en_doc_tokens(spark, sf_dir)
     chunks = rule_chunks_df(snts, ["doc_id"], max_len=6)
     th = thesaurus_with_case(spark, dict(DOC_THESAURUS))
     return type_chunks_suffix(chunks, th).select(
@@ -1714,12 +1722,7 @@ def np_chunks(spark, sf_dir):
     running the pinned POS-lite noun-phrase model (spaCy slot-compatible),
     value-checked against the same run-window SQL the rule chunker obeys —
     the two strategies are interchangeable by contract."""
-    from thesaurus_based_ner_spark.operators.chunking import chunks_df
-
-    docs = spread(T(spark, sf_dir, "documents").filter(F.col("lang") == "en"))
-    snts = tokenize_df(docs.select("doc_id", "text"), "text").select(
-        "doc_id", "tokens"
-    )
+    snts = _en_doc_tokens(spark, sf_dir)
     return chunks_df(snts, ["doc_id"], max_len=6, strategy="np").select(
         "doc_id", "m_start", "m_end", "surface"
     )
@@ -1729,11 +1732,10 @@ def _lsh_planes_sql(n_bits: int, dim: int, seed: int, n_tables: int) -> str:
     """VALUES rows (tbl, j, w) with the SAME md5-derived hyperplanes the
     Spark operator uses — the LSH is deterministic, so the DuckDB oracle
     replicates buckets, multiprobe and re-rank value-exactly."""
-    from thesaurus_based_ner_spark.operators.simsearch import _hyperplane_weights
-
     rows = []
     for t in range(n_tables):
-        for j, w in enumerate(_hyperplane_weights(dim, n_bits, seed + 1000 * t)):
+        planes = simsearch._hyperplane_weights(dim, n_bits, seed + 1000 * t)
+        for j, w in enumerate(planes):
             arr = "[" + ", ".join(repr(x) for x in w) + "]"
             rows.append(f"({t}, {j}, {arr}::DOUBLE[])")
     return ", ".join(rows)
@@ -1899,10 +1901,7 @@ def mention_spans_trie(spark, sf_dir):
     shape: per-batch pandas-on-Arrow, broadcast token trie) under the SAME
     value-exact oracle as the pure-DataFrame strategy — the two plans are
     interchangeable by contract (operators/mentions.py docstring)."""
-    docs = spread(T(spark, sf_dir, "documents").filter(F.col("lang") == "en"))
-    snts = tokenize_df(docs.select("doc_id", "text"), "text").select(
-        "doc_id", "tokens"
-    )
+    snts = _en_doc_tokens(spark, sf_dir)
     return detect_mentions_trie(snts, dict(DOC_THESAURUS), ["doc_id"]).select(
         "doc_id", "m_start", "m_end", "surface", "label"
     )
@@ -1918,14 +1917,7 @@ def mention_spans_dist(spark, sf_dir):
     DataFrame (no driver dict / VALUES), the executor trie is built from
     the parquet side file (detect_mentions_trie_dist), and the result must
     hash-match the same oracle as both other strategies."""
-    from thesaurus_based_ner_spark.operators.mentions import (
-        detect_mentions_trie_dist,
-    )
-
-    docs = spread(T(spark, sf_dir, "documents").filter(F.col("lang") == "en"))
-    snts = tokenize_df(docs.select("doc_id", "text"), "text").select(
-        "doc_id", "tokens"
-    )
+    snts = _en_doc_tokens(spark, sf_dir)
     terms = spark.createDataFrame(DOC_THESAURUS, "term string, label string")
     return detect_mentions_trie_dist(snts, terms, ["doc_id"]).select(
         "doc_id", "m_start", "m_end", "surface", "label"

@@ -12,10 +12,11 @@ length ≥ K), not capitalization; hierarchy fixtures are the ontology dim
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+import hashlib
+
+from pyspark.sql import DataFrame, Window, functions as F
 
 from thesaurus_based_ner_spark.operators import (
-    chunking,
     evalmetrics,
     gold,
     graph,
@@ -23,18 +24,42 @@ from thesaurus_based_ner_spark.operators import (
     sampling,
 )
 from thesaurus_based_ner_spark.operators import thesaurus as th_ops
-from thesaurus_based_ner_spark.operators.mentions import tokenize_df
-from thesaurus_based_ner_spark.plans.queries import _SQL_TOKEN_RE, T, q, spread
-from thesaurus_based_ner_spark.sources.webtext import ONTOLOGY_EDGES
+from thesaurus_based_ner_spark.operators.checkpoint import checkpoint, fork
+from thesaurus_based_ner_spark.operators.chunking import (
+    right_shift_match_chunks,
+    rule_chunks_df,
+)
+from thesaurus_based_ner_spark.operators.mentions import (
+    detect_mentions_df,
+    thesaurus_with_case,
+    tokenize_df,
+)
+from thesaurus_based_ner_spark.operators.multimodal import (
+    decode_and_featurize,
+    resize_plan,
+    sample_frames,
+)
+from thesaurus_based_ner_spark.plans.queries import (
+    _MENTION_CTE,
+    _SQL_TOKEN_RE,
+    _STOP_LIST_SQL,
+    _TH_VALUES,
+    DOC_THESAURUS,
+    T,
+    _doc_tokens,
+    _en_doc_tokens,
+    q,
+    spread,
+)
+from thesaurus_based_ner_spark.sources.webtext import (
+    ONTOLOGY_EDGES,
+    synth_ontology_edges,
+)
+
 
 # ---------------------------------------------------------------------------
 # shared helpers: token-length run spans over the documents table
 # ---------------------------------------------------------------------------
-
-
-def _doc_tokens(spark, sf_dir) -> DataFrame:
-    docs = spread(T(spark, sf_dir, "documents").select("doc_id", "text"))
-    return tokenize_df(docs, "text").select("doc_id", "tokens")
 
 
 def _run_spans(toks: DataFrame, mask) -> DataFrame:
@@ -149,8 +174,6 @@ def _span_diff_frames(spark, sf_dir) -> tuple[DataFrame, DataFrame]:
     cluster this is exactly the stage you'd checkpoint: spans are ~100×
     smaller than the token stream.
     """
-    from thesaurus_based_ner_spark.operators.checkpoint import checkpoint, fork
-
     toks = _doc_tokens(spark, sf_dir)
     pos = toks.select("doc_id", F.posexplode("tokens").alias("pos", "tok"))
     sides = pos.select(
@@ -333,12 +356,6 @@ def gold_pubtator_spans(spark, sf_dir):
 _EDGES_SQL = ", ".join(f"('{c}', '{p}')" for c, p in ONTOLOGY_EDGES)
 
 
-def _edges_df(spark: SparkSession) -> DataFrame:
-    from thesaurus_based_ner_spark.sources.webtext import synth_ontology_edges
-
-    return synth_ontology_edges(spark)
-
-
 @q(
     "negative_cats",
     oracle=f"""
@@ -360,7 +377,9 @@ def _edges_df(spark: SparkSession) -> DataFrame:
     """,
 )
 def negative_cats(spark, sf_dir):
-    return th_ops.umls_negative_cats(_edges_df(spark), ["City", "Country"])
+    return th_ops.umls_negative_cats(
+        synth_ontology_edges(spark), ["City", "Country"]
+    )
 
 
 @q(
@@ -394,7 +413,7 @@ def negative_cats(spark, sf_dir):
 )
 def negative_cats_toplevel(spark, sf_dir):
     return th_ops.negative_cats_from_positive(
-        _edges_df(spark), ["City", "Organization"]
+        synth_ontology_edges(spark), ["City", "Organization"]
     )
 
 
@@ -776,21 +795,6 @@ def remove_misguided(spark, sf_dir):
 # J5: right-shift (containment) chunk ⋈ match combo
 # ---------------------------------------------------------------------------
 
-from thesaurus_based_ner_spark.operators.chunking import (  # noqa: E402
-    right_shift_match_chunks,
-    rule_chunks_df,
-)
-from thesaurus_based_ner_spark.operators.mentions import (  # noqa: E402
-    detect_mentions_df,
-    thesaurus_with_case,
-)
-from thesaurus_based_ner_spark.plans.queries import (  # noqa: E402
-    _MENTION_CTE,
-    _STOP_LIST_SQL,
-    _TH_VALUES,
-    DOC_THESAURUS,
-)
-
 _CHUNK_CTE = f"""
     chq AS (
       SELECT doc_id, toks, unnest(range(1, len(toks) + 1)) AS p FROM docs
@@ -836,10 +840,7 @@ _CHUNK_CTE = f"""
     """,
 )
 def chunk_right_shift(spark, sf_dir):
-    docs = spread(T(spark, sf_dir, "documents").filter(F.col("lang") == "en"))
-    snts = tokenize_df(docs.select("doc_id", "text"), "text").select(
-        "doc_id", "tokens"
-    )
+    snts = _en_doc_tokens(spark, sf_dir)
     chunks = rule_chunks_df(snts, ["doc_id"], max_len=6)
     th = thesaurus_with_case(spark, dict(DOC_THESAURUS))
     matches = detect_mentions_df(snts, th, ["doc_id"], merge_adjacent=False)
@@ -875,10 +876,7 @@ def chunk_right_shift(spark, sf_dir):
     """,
 )
 def msmlc_exploded(spark, sf_dir):
-    docs = spread(T(spark, sf_dir, "documents").filter(F.col("lang") == "en"))
-    snts = tokenize_df(docs.select("doc_id", "text"), "text").select(
-        "doc_id", "tokens"
-    )
+    snts = _en_doc_tokens(spark, sf_dir)
     th = thesaurus_with_case(spark, dict(DOC_THESAURUS))
     resolved = detect_mentions_df(snts, th, ["doc_id"], merge_adjacent=False)
     multi = resolved.join(
@@ -1020,8 +1018,6 @@ def greedy_bio(spark, sf_dir):
 def _w6_fixture() -> list[tuple[int, int, str]]:
     """(id, rank, label) — md5-driven picks from ontology nodes, built on
     the driver and embedded as VALUES on BOTH engines."""
-    import hashlib
-
     nodes = sorted({c for c, _ in ONTOLOGY_EDGES} | {p for _, p in ONTOLOGY_EDGES})
     rows = []
     for i in range(40):
@@ -1082,13 +1078,11 @@ _W6_SQL = ", ".join(f"({i}, {r}, '{l}')" for i, r, l in _w6_fixture())
     """,
 )
 def hierarchical_label_selection(spark, sf_dir):
-    from thesaurus_based_ner_spark.operators.graph import ancestor_closure
-
     rows = ", ".join(f"({i}, {r}, '{l}')" for i, r, l in _w6_fixture())
     ranked = spark.sql(
         f"SELECT * FROM VALUES {rows} AS t(id, rank, label)"
     )
-    closure = ancestor_closure(_edges_df(spark), include_self=True)
+    closure = graph.ancestor_closure(synth_ontology_edges(spark), include_self=True)
     out = th_ops.hierarchical_valid_labels(ranked, closure, ["id"])
     return out.select(F.col("id").cast("bigint").alias("id"), "label", "depth")
 
@@ -1185,10 +1179,6 @@ _FEAT_SQL = ", ".join(
     """,
 )
 def multimodal_features(spark, sf_dir):
-    from thesaurus_based_ner_spark.operators.multimodal import (
-        decode_and_featurize,
-    )
-
     docs = spread(T(spark, sf_dir, "documents").select("doc_id", "text"))
     media = docs.select(
         F.col("doc_id").alias("media_id"),
@@ -1255,12 +1245,6 @@ def multimodal_frame_resize(spark, sf_dir):
     Geometry + frame fan-out are pure JVM integer arithmetic
     (operators/multimodal.resize_plan / sample_frames); only the pixel
     kernels are codec-stubbed."""
-    from thesaurus_based_ner_spark.operators.multimodal import (
-        decode_and_featurize,
-        resize_plan,
-        sample_frames,
-    )
-
     docs = spread(T(spark, sf_dir, "documents").select("doc_id", "text"))
     media = docs.select(
         F.col("doc_id").alias("media_id"),

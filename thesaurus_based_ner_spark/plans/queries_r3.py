@@ -12,6 +12,7 @@ with a closed-form oracle stated from the source table.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 
@@ -19,25 +20,32 @@ from pyspark.sql import DataFrame, functions as F
 
 from thesaurus_based_ner_spark.operators import graph, pseudo
 from thesaurus_based_ner_spark.operators import thesaurus as th_ops
+from thesaurus_based_ner_spark.operators.evalmetrics import (
+    dataset_span_diff,
+    hierarchical_label_rollup,
+    span_mismatch_analysis,
+)
+from thesaurus_based_ner_spark.operators.gold import (
+    remove_space_tokens_df,
+    split_doc_sentences_df,
+)
 from thesaurus_based_ner_spark.operators.mentions import (
     detect_mentions_df,
     thesaurus_with_case,
-    tokenize_df,
 )
 from thesaurus_based_ner_spark.plans.queries import (
     _MENTION_CTE,
+    _SQL_TOKEN_RE,
     DOC_THESAURUS,
     T,
+    _doc_tokens,
+    _en_doc_tokens,
     q,
-    spread,
 )
-
-from thesaurus_based_ner_spark.plans.queries import _SQL_TOKEN_RE as _SQL_TOKEN_RE_R3
-
-
-def _doc_tokens_r3(spark, sf_dir):
-    docs = spread(T(spark, sf_dir, "documents").select("doc_id", "text"))
-    return tokenize_df(docs, "text").select("doc_id", "tokens")
+from thesaurus_based_ner_spark.plans.queries_ext import (
+    _dual_cte,
+    _span_diff_frames,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -46,8 +54,6 @@ def _doc_tokens_r3(spark, sf_dir):
 
 
 def _fixture_dir(kind: str, sf_dir: str) -> str:
-    import hashlib
-
     h = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
     return os.path.join(tempfile.gettempdir(), f"tbner_fix_{kind}_{h}")
 
@@ -542,10 +548,7 @@ def pseudo_sentences(spark, sf_dir):
     with zero mentions are dropped; n_tagged (non-O tags) must equal the
     oracle's summed span lengths — a value check on the BIO encoding
     itself (pseudo_dataset.py:87-112)."""
-    docs = spread(T(spark, sf_dir, "documents").filter(F.col("lang") == "en"))
-    snts = tokenize_df(docs.select("doc_id", "text"), "text").select(
-        "doc_id", "tokens"
-    )
+    snts = _en_doc_tokens(spark, sf_dir)
     th = thesaurus_with_case(spark, dict(DOC_THESAURUS))
     mentions = detect_mentions_df(snts, th, ["doc_id"])
     ds = pseudo.pseudo_ner_dataset(snts, mentions, ["doc_id"])
@@ -563,10 +566,7 @@ def pseudo_sentences(spark, sf_dir):
 # analyze_span_mismatch.py) over the token-length-run gold/pred fixtures
 # ---------------------------------------------------------------------------
 
-def _span_mismatch_oracle() -> str:
-    from thesaurus_based_ner_spark.plans.queries_ext import _dual_cte
-
-    return _dual_cte() + """
+_SPAN_MISMATCH_ORACLE = _dual_cte() + """
     , exact AS (
       SELECT p.label FROM pred p WHERE EXISTS (
         SELECT 1 FROM gold g WHERE g.doc_id = p.doc_id
@@ -625,30 +625,19 @@ def _span_mismatch_oracle() -> str:
     """
 
 
-def _register_span_mismatch():
-    from thesaurus_based_ner_spark.operators.evalmetrics import (
-        span_mismatch_analysis,
-    )
-    from thesaurus_based_ner_spark.plans.queries_ext import (
-        _span_diff_frames,
-    )
-
-    @q("span_mismatch", oracle=_span_mismatch_oracle())
-    def span_mismatch(spark, sf_dir):
-        """Boundary-delta span classification (analyze_span_mismatch.py):
-        TP / FP / early-late start-end counters per predicted label plus
-        the All row, over the deterministic token-length-run gold/pred
-        fixture pair. r9: the analysis references pred 3x and gold 3x
-        (semi/anti/inner/anti joins), so the non-checkpointed fixtures
-        re-derived the tokenize+posexplode+island-window subtree per
-        reference; the single-pass checkpointed run frame
-        (_span_diff_frames, the r3 fix for dataset_span_diff) produces
-        the identical gold/pred runs from ONE corpus pass."""
-        gold, pred = _span_diff_frames(spark, sf_dir)
-        return span_mismatch_analysis(pred, gold, ["doc_id"])
-
-
-_register_span_mismatch()
+@q("span_mismatch", oracle=_SPAN_MISMATCH_ORACLE)
+def span_mismatch(spark, sf_dir):
+    """Boundary-delta span classification (analyze_span_mismatch.py):
+    TP / FP / early-late start-end counters per predicted label plus
+    the All row, over the deterministic token-length-run gold/pred
+    fixture pair. r9: the analysis references pred 3x and gold 3x
+    (semi/anti/inner/anti joins), so the non-checkpointed fixtures
+    re-derived the tokenize+posexplode+island-window subtree per
+    reference; the single-pass checkpointed run frame
+    (_span_diff_frames, the r3 fix for dataset_span_diff) produces
+    the identical gold/pred runs from ONE corpus pass."""
+    gold, pred = _span_diff_frames(spark, sf_dir)
+    return span_mismatch_analysis(pred, gold, ["doc_id"])
 
 
 # ---------------------------------------------------------------------------
@@ -695,10 +684,6 @@ def label_tree_rollup(spark, sf_dir):
     """Subtree-consistent per-label counts with percent-of-root over the
     brand -> type-word -> ROOT hierarchy (the reference's UMLS semantic-
     type tree statistics, tree_visualize.py:145-186)."""
-    from thesaurus_based_ner_spark.operators.evalmetrics import (
-        hierarchical_label_rollup,
-    )
-
     p = T(spark, sf_dir, "part")
     counts = p.groupBy(F.col("p_brand").alias("label")).agg(
         F.count("*").alias("n")
@@ -715,16 +700,7 @@ def label_tree_rollup(spark, sf_dir):
     )
 
 
-def _register_span_diff():
-    from thesaurus_based_ner_spark.operators.evalmetrics import (
-        dataset_span_diff,
-    )
-    from thesaurus_based_ner_spark.plans.queries_ext import (
-        _dual_cte,
-        _span_diff_frames,
-    )
-
-    oracle = _dual_cte() + """
+_SPAN_DIFF_ORACLE = _dual_cte() + """
     , shared AS (
       SELECT DISTINCT g.doc_id FROM gold g JOIN pred p USING (doc_id)
     ),
@@ -747,18 +723,16 @@ def _register_span_diff():
     SELECT * FROM over_s UNION ALL SELECT * FROM under_s
     """
 
-    @q("dataset_span_diff", oracle=oracle)
-    def dataset_span_diff_q(spark, sf_dir):
-        """Over/under-predicted spans between the gold and pred fixture
-        datasets on shared sentences (compare_msc_datasets.py) — base =
-        gold runs, focus = pred runs, both from the single-pass
-        checkpointed run frame (r3 VERDICT: the per-reference recompute
-        made this the slowest bench query)."""
-        gold, pred = _span_diff_frames(spark, sf_dir)
-        return dataset_span_diff(gold, pred, ["doc_id"])
 
-
-_register_span_diff()
+@q("dataset_span_diff", oracle=_SPAN_DIFF_ORACLE)
+def dataset_span_diff_q(spark, sf_dir):
+    """Over/under-predicted spans between the gold and pred fixture
+    datasets on shared sentences (compare_msc_datasets.py) — base =
+    gold runs, focus = pred runs, both from the single-pass
+    checkpointed run frame (r3 VERDICT: the per-reference recompute
+    made this the slowest bench query)."""
+    gold, pred = _span_diff_frames(spark, sf_dir)
+    return dataset_span_diff(gold, pred, ["doc_id"])
 
 
 # ---------------------------------------------------------------------------
@@ -779,7 +753,7 @@ _register_span_diff()
            string_agg(toks[p], '|' ORDER BY p) AS tokens,
            string_agg('T' || (p - 1), '|' ORDER BY p) AS tags
     FROM pos GROUP BY doc_id
-    """.replace("{token_re}", _SQL_TOKEN_RE_R3),
+    """.replace("{token_re}", _SQL_TOKEN_RE),
 )
 def tagged_space_removal(spark, sf_dir):
     """remove_space_token (orig_dataset.py:86-101): inject literal-space
@@ -787,11 +761,7 @@ def tagged_space_removal(spark, sf_dir):
     array filter, and require the output to equal the ORIGINAL
     token/tag arrays exactly — any desync between the two filters breaks
     the value hash."""
-    from thesaurus_based_ner_spark.operators.gold import (
-        remove_space_tokens_df,
-    )
-
-    toks = _doc_tokens_r3(spark, sf_dir)
+    toks = _doc_tokens(spark, sf_dir)
     base = toks.select(
         "doc_id",
         F.col("tokens"),
@@ -852,7 +822,7 @@ def tagged_space_removal(spark, sf_dir):
            string_agg(tok, ' ' ORDER BY p) AS sentence,
            string_agg('T' || (p - 1), '|' ORDER BY p) AS tags
     FROM sid GROUP BY doc_id, snt_id
-    """.replace("{token_re}", _SQL_TOKEN_RE_R3),
+    """.replace("{token_re}", _SQL_TOKEN_RE),
 )
 def doc_sentence_split(spark, sf_dir):
     """snt_tokenize_ner_datasets (orig_dataset.py:255-289): document rows
@@ -861,11 +831,7 @@ def doc_sentence_split(spark, sf_dir):
     no periods, so a frequent corpus token plays the boundary), token and tag slices staying aligned —
     tags carry the GLOBAL document position so any slice misalignment
     breaks the value hash."""
-    from thesaurus_based_ner_spark.operators.gold import (
-        split_doc_sentences_df,
-    )
-
-    toks = _doc_tokens_r3(spark, sf_dir)
+    toks = _doc_tokens(spark, sf_dir)
     base = toks.select(
         "doc_id",
         "tokens",

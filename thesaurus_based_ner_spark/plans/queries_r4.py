@@ -24,25 +24,47 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from thesaurus_based_ner_spark.plans.queries import _SQL_TOKEN_RE, T, q
+from thesaurus_based_ner_spark.operators.evalmetrics import (
+    dataset_span_diff,
+    span_markup,
+)
+from thesaurus_based_ner_spark.operators.gold import (
+    CONLL2003_CATEGORY_MAPPER,
+    map_conll_categories,
+)
+from thesaurus_based_ner_spark.operators.graph import descendants_bfs
+from thesaurus_based_ner_spark.operators.kb_loaders import (
+    dictionary_set_algebra,
+    tui_terms,
+    wikidata_class_terms,
+)
+from thesaurus_based_ner_spark.operators.mentions import bio_tags_df
+from thesaurus_based_ner_spark.operators.pseudo import (
+    drop_unknown_type,
+    join_pseudo_and_gold,
+)
+from thesaurus_based_ner_spark.plans.queries import (
+    _SQL_TOKEN_RE,
+    T,
+    _doc_tokens,
+    q,
+)
+from thesaurus_based_ner_spark.plans.queries_ext import (
+    _GOLD_CTE,
+    _GOLD_MASK_SQL,
+    _NC_MASK_SPARK,
+    _dual_cte,
+    _gold_spans,
+    _run_spans,
+    _run_sql,
+    _span_diff_frames,
+)
 
-
-def _register_span_markup():
-    from thesaurus_based_ner_spark.operators.evalmetrics import (
-        dataset_span_diff,
-        span_markup,
-    )
-    from thesaurus_based_ner_spark.plans.queries_ext import (
-        _doc_tokens,
-        _dual_cte,
-        _span_diff_frames,
-    )
-
-    # same diff CTEs as dataset_span_diff, then join tokens back and build
-    # the exact bracket string: lctx [direction:label span ] rctx with a
-    # ±5/+6-token context window (compare.py:107-108 stt=max(0,s-5),
-    # ed=e+6)
-    oracle = _dual_cte() + """
+# same diff CTEs as dataset_span_diff, then join tokens back and build
+# the exact bracket string: lctx [direction:label span ] rctx with a
+# ±5/+6-token context window (compare.py:107-108 stt=max(0,s-5),
+# ed=e+6)
+_SPAN_MARKUP_ORACLE = _dual_cte() + """
     , shared AS (
       SELECT DISTINCT g.doc_id FROM gold g JOIN pred p USING (doc_id)
     ),
@@ -80,18 +102,16 @@ def _register_span_markup():
     FROM diff d JOIN docs USING (doc_id)
     """
 
-    @q("span_markup_diff", oracle=oracle)
-    def span_markup_diff(spark, sf_dir):
-        """Bracket-markup rendering of every over/under diff span in its
-        sentence context — reuses the single-pass checkpointed run frame,
-        adds one doc-keyed join to the token frame, and builds the string
-        with pure codegen array/string expressions (no UDF)."""
-        gold, pred = _span_diff_frames(spark, sf_dir)
-        diff = dataset_span_diff(gold, pred, ["doc_id"])
-        return span_markup(diff, _doc_tokens(spark, sf_dir), ["doc_id"])
 
-
-_register_span_markup()
+@q("span_markup_diff", oracle=_SPAN_MARKUP_ORACLE)
+def span_markup_diff(spark, sf_dir):
+    """Bracket-markup rendering of every over/under diff span in its
+    sentence context — reuses the single-pass checkpointed run frame,
+    adds one doc-keyed join to the token frame, and builds the string
+    with pure codegen array/string expressions (no UDF)."""
+    gold, pred = _span_diff_frames(spark, sf_dir)
+    diff = dataset_span_diff(gold, pred, ["doc_id"])
+    return span_markup(diff, _doc_tokens(spark, sf_dir), ["doc_id"])
 
 
 # ---------------------------------------------------------------------------
@@ -125,8 +145,6 @@ def genia_descendant_cats(spark, sf_dir):
     """Descendant-closure term lookup: BFS over synthesized CHD edges from
     root C1 (descendants_bfs — frontier joins, no all-pairs closure), then
     the MRCONSO term join with the source-vocab exclusion filter."""
-    from thesaurus_based_ner_spark.operators.graph import descendants_bfs
-
     p = T(spark, sf_dir, "part")
     edges = (
         p.select(
@@ -187,8 +205,6 @@ def tui_prefix_terms(spark, sf_dir):
     """STN-prefix TUI subtree → CUIs → source-filtered distinct terms
     (load_TUI_terms): broadcast 1-row root, broadcast TUI dim, CUI
     semi-join on the shuffle key; lang/sab filters reach the scan."""
-    from thesaurus_based_ner_spark.operators.kb_loaders import tui_terms
-
     p = T(spark, sf_dir, "part")
     srdef = p.select(
         F.concat(F.lit("T"), "p_partkey").alias("tui"),
@@ -246,10 +262,6 @@ def wikidata_class_terms_q(spark, sf_dir):
     """Subclass-closure class membership → labels∪alias names
     (load_DBPedia_terms): BFS frontier joins for the closure, semi-joins
     for membership and naming — no all-pairs step anywhere."""
-    from thesaurus_based_ner_spark.operators.kb_loaders import (
-        wikidata_class_terms,
-    )
-
     p = T(spark, sf_dir, "part")
     edges = p.select(
         F.concat(F.lit("K"), F.expr("p_partkey DIV 5")).alias("parent"),
@@ -336,10 +348,6 @@ def twitter_term2cat(spark, sf_dir):
     duplicate removal → term2cat (load_twitter_main_dictionary). Each
     subtraction is one term-keyed anti-join; the dedup is one
     groupBy(term) keeping single-category terms."""
-    from thesaurus_based_ner_spark.operators.kb_loaders import (
-        dictionary_set_algebra,
-    )
-
     p = T(spark, sf_dir, "part")
     cat_terms = p.select(
         F.split_part(F.col("p_type"), F.lit(" "), F.lit(1)).alias("cat"),
@@ -356,17 +364,10 @@ def twitter_term2cat(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _register_unknown_type_filter():
-    from thesaurus_based_ner_spark.operators.pseudo import drop_unknown_type
-    from thesaurus_based_ner_spark.plans.queries_ext import (
-        _GOLD_CTE,
-        _gold_spans,
-    )
-
-    # F7 (reference gold_dataset.py:332,420): UnknownType spans are skipped
-    # when building MSMLC datasets. Fixture: relabel every third-offset gold
-    # run UnknownType, then the operator must drop exactly those.
-    oracle = _GOLD_CTE + """
+# F7 (reference gold_dataset.py:332,420): UnknownType spans are skipped
+# when building MSMLC datasets. Fixture: relabel every third-offset gold
+# run UnknownType, then the operator must drop exactly those.
+_UNKNOWN_TYPE_ORACLE = _GOLD_CTE + """
     SELECT doc_id, m_start, m_end, label FROM (
       SELECT doc_id, m_start, m_end,
              CASE WHEN m_start % 3 = 0 THEN 'UnknownType' ELSE label END
@@ -375,40 +376,28 @@ def _register_unknown_type_filter():
     ) WHERE label <> 'UnknownType'
     """
 
-    @q("unknown_type_filter", oracle=oracle)
-    def unknown_type_filter(spark, sf_dir):
-        spans = _gold_spans(spark, sf_dir).withColumn(
-            "label",
-            F.when(F.col("m_start") % 3 == 0, F.lit("UnknownType")).otherwise(
-                F.col("label")
-            ),
-        )
-        return drop_unknown_type(spans).select(
-            "doc_id", "m_start", "m_end", "label"
-        )
 
-
-_register_unknown_type_filter()
-
-
-def _register_pseudo_gold_split_union():
-    from thesaurus_based_ner_spark.operators.mentions import bio_tags_df
-    from thesaurus_based_ner_spark.operators.pseudo import join_pseudo_and_gold
-    from thesaurus_based_ner_spark.plans.queries_ext import (
-        _GOLD_MASK_SQL,
-        _doc_tokens,
-        _gold_spans,
-        _run_sql,
+@q("unknown_type_filter", oracle=_UNKNOWN_TYPE_ORACLE)
+def unknown_type_filter(spark, sf_dir):
+    spans = _gold_spans(spark, sf_dir).withColumn(
+        "label",
+        F.when(F.col("m_start") % 3 == 0, F.lit("UnknownType")).otherwise(
+            F.col("label")
+        ),
+    )
+    return drop_unknown_type(spans).select(
+        "doc_id", "m_start", "m_end", "label"
     )
 
-    # J7/SO4 (reference pseudo_dataset.py:144-161): DatasetDict assembly —
-    # pseudo rows become the train split, gold rows validation/test, in one
-    # table. Fixture splits the corpus by doc_id % 4 (0,1→pseudo, 2→val,
-    # 3→test); ner_tags come from the shared gold mask so every engine-side
-    # row is oracle-derivable. Output is the per-split audit aggregate
-    # (sentence/token/B-tag counts) — robust to array-representation drift
-    # between engines while still requiring the union to be exact.
-    oracle = "WITH " + _run_sql(_GOLD_MASK_SQL) + f"""
+
+# J7/SO4 (reference pseudo_dataset.py:144-161): DatasetDict assembly —
+# pseudo rows become the train split, gold rows validation/test, in one
+# table. Fixture splits the corpus by doc_id % 4 (0,1→pseudo, 2→val,
+# 3→test); ner_tags come from the shared gold mask so every engine-side
+# row is oracle-derivable. Output is the per-split audit aggregate
+# (sentence/token/B-tag counts) — robust to array-representation drift
+# between engines while still requiring the union to be exact.
+_SPLIT_UNION_ORACLE = "WITH " + _run_sql(_GOLD_MASK_SQL) + f"""
     , split_docs AS (
       SELECT doc_id, len(regexp_extract_all(text, '{_SQL_TOKEN_RE}')) AS n_toks,
              CASE WHEN doc_id % 4 IN (0, 1) THEN 'train'
@@ -427,100 +416,79 @@ def _register_pseudo_gold_split_union():
     GROUP BY s.split
     """
 
-    @q("pseudo_gold_split_union", oracle=oracle)
-    def pseudo_gold_split_union(spark, sf_dir):
-        sents = _doc_tokens(spark, sf_dir)
-        mentions = _gold_spans(spark, sf_dir).withColumn(
-            "label", F.lit("TERM")
-        )
-        tagged = bio_tags_df(sents, mentions, ["doc_id"])
-        pseudo_f = tagged.filter(F.col("doc_id") % 4 < 2)
-        val_f = tagged.filter(F.col("doc_id") % 4 == 2)
-        test_f = tagged.filter(F.col("doc_id") % 4 == 3)
-        unioned = join_pseudo_and_gold(pseudo_f, val_f, test_f)
-        return unioned.groupBy("split").agg(
-            F.count("*").alias("n_sents"),
-            F.sum(F.size("tokens")).alias("n_toks"),
-            F.sum(
-                F.size(F.filter("ner_tags", lambda t: t.startswith("B-")))
-            ).alias("n_b"),
-        )
 
-
-_register_pseudo_gold_split_union()
-
-
-def _register_conll_category_mapped():
-    from thesaurus_based_ner_spark.operators.gold import (
-        CONLL2003_CATEGORY_MAPPER,
-        map_conll_categories,
+@q("pseudo_gold_split_union", oracle=_SPLIT_UNION_ORACLE)
+def pseudo_gold_split_union(spark, sf_dir):
+    sents = _doc_tokens(spark, sf_dir)
+    mentions = _gold_spans(spark, sf_dir).withColumn(
+        "label", F.lit("TERM")
     )
-    from thesaurus_based_ner_spark.plans.queries_ext import (
-        _GOLD_CTE,
-        _gold_spans,
+    tagged = bio_tags_df(sents, mentions, ["doc_id"])
+    pseudo_f = tagged.filter(F.col("doc_id") % 4 < 2)
+    val_f = tagged.filter(F.col("doc_id") % 4 == 2)
+    test_f = tagged.filter(F.col("doc_id") % 4 == 3)
+    unioned = join_pseudo_and_gold(pseudo_f, val_f, test_f)
+    return unioned.groupBy("split").agg(
+        F.count("*").alias("n_sents"),
+        F.sum(F.size("tokens")).alias("n_toks"),
+        F.sum(
+            F.size(F.filter("ner_tags", lambda t: t.startswith("B-")))
+        ).alias("n_b"),
     )
 
-    # J8 (reference typer_to_bio.py:6-15): DBpedia-class labels map onto
-    # CoNLL2003 categories; classes outside the mapper fall through
-    # unchanged. Fixture assigns each gold run a class from the full mapper
-    # domain plus two unmapped classes, keyed on (m_start + m_end).
-    classes = sorted(
-        {c for cls in CONLL2003_CATEGORY_MAPPER.values() for c in cls}
-    ) + ["<http://dbpedia.org/ontology/Color>", "plain-label"]
-    cls_to_cat = {
-        c: cat
-        for cat, cs in CONLL2003_CATEGORY_MAPPER.items()
-        for c in cs
-    }
-    n = len(classes)
-    sql_classes = ", ".join("'" + c.replace("'", "''") + "'" for c in classes)
-    sql_case = " ".join(
-        f"WHEN '{c}' THEN '{cls_to_cat[c]}'" for c in classes if c in cls_to_cat
-    )
-    oracle = _GOLD_CTE + f"""
+
+# J8 (reference typer_to_bio.py:6-15): DBpedia-class labels map onto
+# CoNLL2003 categories; classes outside the mapper fall through
+# unchanged. Fixture assigns each gold run a class from the full mapper
+# domain plus two unmapped classes, keyed on (m_start + m_end).
+_CONLL_CLASSES = sorted(
+    {c for cls in CONLL2003_CATEGORY_MAPPER.values() for c in cls}
+) + ["<http://dbpedia.org/ontology/Color>", "plain-label"]
+_CLS_TO_CAT = {
+    c: cat
+    for cat, cs in CONLL2003_CATEGORY_MAPPER.items()
+    for c in cs
+}
+_N_CLASSES = len(_CONLL_CLASSES)
+_SQL_CLASSES = ", ".join(
+    "'" + c.replace("'", "''") + "'" for c in _CONLL_CLASSES
+)
+_SQL_CASE = " ".join(
+    f"WHEN '{c}' THEN '{_CLS_TO_CAT[c]}'"
+    for c in _CONLL_CLASSES
+    if c in _CLS_TO_CAT
+)
+_CONLL_ORACLE = _GOLD_CTE + f"""
     SELECT doc_id, m_start, m_end,
-           CASE cls {sql_case} ELSE cls END AS label
+           CASE cls {_SQL_CASE} ELSE cls END AS label
     FROM (
       SELECT doc_id, m_start, m_end,
-             ([{sql_classes}])[CAST((m_start + m_end) % {n} AS INT) + 1]
+             ([{_SQL_CLASSES}])[CAST((m_start + m_end) % {_N_CLASSES} AS INT) + 1]
                AS cls
       FROM gold
     )
     """
 
-    @q("conll_category_mapped", oracle=oracle)
-    def conll_category_mapped(spark, sf_dir):
-        spans = _gold_spans(spark, sf_dir).withColumn(
-            "label",
-            F.element_at(
-                F.array(*[F.lit(c) for c in classes]),
-                ((F.col("m_start") + F.col("m_end")) % n + 1).cast("int"),
-            ),
-        )
-        return map_conll_categories(spans, spark).select(
-            "doc_id", "m_start", "m_end", "label"
-        )
 
-
-_register_conll_category_mapped()
-
-
-def _register_bio_tag_rows():
-    from thesaurus_based_ner_spark.operators.mentions import bio_tags_df
-    from thesaurus_based_ner_spark.plans.queries_ext import (
-        _GOLD_MASK_SQL,
-        _NC_MASK_SPARK,
-        _doc_tokens,
-        _gold_spans,
-        _run_sql,
-        _run_spans,
+@q("conll_category_mapped", oracle=_CONLL_ORACLE)
+def conll_category_mapped(spark, sf_dir):
+    spans = _gold_spans(spark, sf_dir).withColumn(
+        "label",
+        F.element_at(
+            F.array(*[F.lit(c) for c in _CONLL_CLASSES]),
+            ((F.col("m_start") + F.col("m_end")) % _N_CLASSES + 1).cast("int"),
+        ),
+    )
+    return map_conll_categories(spans, spark).select(
+        "doc_id", "m_start", "m_end", "label"
     )
 
-    # U5 (reference two_stage.py:47-65): BIO encoding drops nc-* spans at
-    # encode time. Fixture: gold runs labeled TERM plus vowel-final-token
-    # runs labeled nc-x (the operator must ignore the latter); output one
-    # row per token position for representation-robust hashing.
-    oracle = "WITH " + _run_sql(_GOLD_MASK_SQL) + f"""
+
+# U5 (reference two_stage.py:47-65): BIO encoding drops nc-* spans at
+# encode time. Fixture: gold runs labeled TERM plus vowel-final-token
+# runs labeled nc-x (the operator must ignore the latter); output one
+# row per token position for representation-robust hashing.
+_BIO_TAG_ROWS_ORACLE = "WITH " + _run_sql(_GOLD_MASK_SQL) + f"""
     , docs2 AS (
       SELECT doc_id, regexp_extract_all(text, '{_SQL_TOKEN_RE}') AS toks
       FROM documents
@@ -537,20 +505,18 @@ def _register_bio_tag_rows():
      AND p.p - 1 >= r.m_start AND p.p - 1 < r.m_end
     """
 
-    @q("bio_tag_rows", oracle=oracle)
-    def bio_tag_rows(spark, sf_dir):
-        sents = _doc_tokens(spark, sf_dir)
-        gold_m = _gold_spans(spark, sf_dir).withColumn("label", F.lit("TERM"))
-        nc_m = _run_spans(sents, _NC_MASK_SPARK()).withColumn(
-            "label", F.lit("nc-x")
-        )
-        mentions = gold_m.select(
-            "doc_id", "m_start", "m_end", "label"
-        ).unionByName(nc_m.select("doc_id", "m_start", "m_end", "label"))
-        tagged = bio_tags_df(sents, mentions, ["doc_id"])
-        return tagged.select(
-            "doc_id", F.posexplode("ner_tags").alias("pos", "tag")
-        ).select("doc_id", F.col("pos").cast("bigint").alias("pos"), "tag")
 
-
-_register_bio_tag_rows()
+@q("bio_tag_rows", oracle=_BIO_TAG_ROWS_ORACLE)
+def bio_tag_rows(spark, sf_dir):
+    sents = _doc_tokens(spark, sf_dir)
+    gold_m = _gold_spans(spark, sf_dir).withColumn("label", F.lit("TERM"))
+    nc_m = _run_spans(sents, _NC_MASK_SPARK()).withColumn(
+        "label", F.lit("nc-x")
+    )
+    mentions = gold_m.select(
+        "doc_id", "m_start", "m_end", "label"
+    ).unionByName(nc_m.select("doc_id", "m_start", "m_end", "label"))
+    tagged = bio_tags_df(sents, mentions, ["doc_id"])
+    return tagged.select(
+        "doc_id", F.posexplode("ner_tags").alias("pos", "tag")
+    ).select("doc_id", F.col("pos").cast("bigint").alias("pos"), "tag")

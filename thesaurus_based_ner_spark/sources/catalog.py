@@ -101,41 +101,26 @@ class Catalog:
         fingerprint: str = "",
         partition_by: list[str] | None = None,
         stage: str = "",
-        max_records_per_file: int | None = None,
-        sort_by: list[str] | None = None,
     ) -> DataFrame:
         """Materialize df as a checkpoint table with lineage counters.
 
         Lineage records: stage, fingerprint, wall-clock, rows per output
         partition file (per-partition lineage per north_rule). Row counts
         come from the parquet footers — no extra job.
-
-        max_records_per_file caps output file size (the anti-small/huge-
-        files lever: at 100 TB, uncapped tasks emit multi-GB files that
-        defeat downstream split parallelism, while per-key partitioning
-        sprays millions of tiny ones). sort_by sorts WITHIN partitions
-        before writing — no extra shuffle — tightening parquet min/max
-        column stats so later scans prune row groups on those keys.
         """
         t0 = time.time()
         # A9 per-stage counter metrics: an Observation rides the write job
         # itself (no extra action) and lands in the lineage sidecar.
         obs = Observation(f"obs_{name}_{int(t0 * 1000)}")
         df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        if sort_by:
-            df = df.sortWithinPartitions(*sort_by)
         if self.use_iceberg:
             # Iceberg backend: namespaced table, snapshot = lineage anchor.
             wt = df.writeTo(self._table(name))
-            if max_records_per_file:
-                wt = wt.option("maxRecordsPerFile", str(max_records_per_file))
             if partition_by:
                 wt = wt.partitionedBy(*[F.col(c) for c in partition_by])
             wt.createOrReplace()
         else:
             writer = df.write.mode("overwrite")
-            if max_records_per_file:
-                writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(self.path(name))

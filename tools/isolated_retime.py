@@ -34,7 +34,6 @@ _CHILD = r"""
 import json, os, sys, time
 sys.path.insert(0, os.environ["TBNER_REPO"])
 from bench import _spark  # same session conf + tmpfs local dirs as bench
-from thesaurus_based_ner_spark.plans import queries_ext, queries_r3, queries_r4  # noqa: F401
 from thesaurus_based_ner_spark.plans.queries import QUERIES
 
 name = os.environ["TBNER_QUERY"]
