@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import ast
 import logging
 import pathlib
 
@@ -76,3 +77,19 @@ def test_local_checkpoint_is_called_only_by_the_helper():
         if "localCheckpoint(" in p.read_text()
     )
     assert callers == ["operators/checkpoint.py"], callers
+
+
+def test_no_silent_except_exception_handler():
+    """An `except Exception` handler must log or re-raise: a body that is
+    only `pass` or `return ...` hides the failure."""
+    pkg = pathlib.Path(thesaurus_based_ner_spark.__file__).parent
+    silent = sorted(
+        f"{p.relative_to(pkg)}:{node.lineno}"
+        for p in pkg.rglob("*.py")
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.ExceptHandler)
+        and isinstance(node.type, ast.Name)
+        and node.type.id == "Exception"
+        and all(isinstance(stmt, (ast.Pass, ast.Return)) for stmt in node.body)
+    )
+    assert silent == [], silent

@@ -150,10 +150,10 @@ def test_unrolled_cosine_is_bitwise_the_fold(spark):
 
 
 def test_np_chunker_parity_with_rule_chunker(spark):
-    """chunker="np" (iterator-init mapInPandas, POS-lite model) must equal
-    the pure-SQL rule chunker on the fixture corpus — the two strategies
+    """np_chunks_df (iterator-init mapInPandas, POS-lite model) must equal
+    the pure-SQL rule chunker on the fixture corpus — the two chunkers
     are interchangeable by contract."""
-    from thesaurus_based_ner_spark.operators.chunking import chunks_df
+    from thesaurus_based_ner_spark.operators.chunking import np_chunks_df
     from thesaurus_based_ner_spark.sources.webtext import synth_webtext
 
     docs = synth_webtext(spark, 80).filter(F.col("lang") == "en")
@@ -163,8 +163,8 @@ def test_np_chunker_parity_with_rule_chunker(spark):
     key = lambda df: {
         (r.doc_id, r.m_start, r.m_end, r.surface) for r in df.collect()
     }
-    rule = key(chunks_df(snts, ["doc_id"], strategy="rule"))
-    np_ = key(chunks_df(snts, ["doc_id"], strategy="np"))
+    rule = key(rule_chunks_df(snts, ["doc_id"]))
+    np_ = key(np_chunks_df(snts, ["doc_id"]))
     assert rule == np_
     assert len(rule) > 50
 

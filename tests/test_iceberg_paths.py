@@ -9,9 +9,12 @@ the rest of the suite; swapping the backend is config, not code.
 
 from __future__ import annotations
 
+import logging
+
 import pyspark.sql
 import pytest
 
+from thesaurus_based_ner_spark.sources import catalog as catalog_mod
 from thesaurus_based_ner_spark.sources.catalog import Catalog
 
 
@@ -116,23 +119,6 @@ def test_iceberg_write_uses_v2_create_or_replace(spark, icat):
     assert not any(".snapshots" in q for q in sqls)
 
 
-def test_iceberg_upsert_issues_merge_into(spark, icat):
-    cat, calls, sqls = icat
-    df = spark.range(2).selectExpr("CAST(id AS INT) AS k", "'y' AS v")
-    cat.write("dim", df)  # creates the sidecar so exists() is True
-    cat.upsert("dim", df, keys=["k"])
-    merges = [q for q in sqls if "MERGE INTO" in q]
-    assert len(merges) == 1
-    m = merges[0]
-    assert f"MERGE INTO {cat.namespace}.dim t" in m
-    assert "t.k = s.k" in m
-    assert "WHEN MATCHED THEN UPDATE SET *" in m
-    assert "WHEN NOT MATCHED THEN INSERT *" in m
-    # the in-place MERGE refreshes the sidecar with the ref-head snapshot
-    assert cat._read_meta("dim")["snapshot_id"] == 5151
-    assert cat._read_meta("dim")["stage"] == "upsert:dim"
-
-
 def test_iceberg_replace_groups_deletes_then_appends(spark, icat):
     cat, calls, sqls = icat
     df = spark.range(2).selectExpr("CAST(id AS INT) AS k", "'z' AS v")
@@ -148,9 +134,9 @@ def test_iceberg_replace_groups_deletes_then_appends(spark, icat):
 
 def test_swap_write_crash_recovery(spark, tmp_path):
     """A crash between _swap_write's two renames leaves the live dir
-    missing and name__upsert_old complete; the next upsert must RESTORE
-    the old table and merge into it — not silently rewrite the table
-    from the incoming batch alone."""
+    missing and name__upsert_old complete; the next replace_groups must
+    RESTORE the old table and replace into it — not silently rewrite the
+    table from the incoming batch alone."""
     import os
     import shutil
 
@@ -165,23 +151,24 @@ def test_swap_write_crash_recovery(spark, tmp_path):
     assert not os.path.isdir(cat.path("t"))
 
     inc = spark.createDataFrame([(3, "c2"), (4, "d")], "k int, v string")
-    out = {(r.k, r.v) for r in cat.upsert("t", inc, keys=["k"]).collect()}
-    # all prior rows survive; key 3 updated, key 4 appended
+    out = {(r.k, r.v) for r in cat.replace_groups("t", inc, ["k"]).collect()}
+    # all prior rows survive; group 3 replaced, group 4 appended
     assert out == {(1, "a"), (2, "b"), (3, "c2"), (4, "d")}
     assert not os.path.isdir(cat.path("t__upsert_old"))
     assert not os.path.isdir(cat.path("t__upsert_tmp"))
 
     # superseded-old state (crash after swap, before cleanup): old removed
     shutil.copytree(cat.path("t"), cat.path("t__upsert_old"))
-    out2 = {(r.k, r.v) for r in cat.upsert("t", inc, keys=["k"]).collect()}
+    out2 = {(r.k, r.v) for r in cat.replace_groups("t", inc, ["k"]).collect()}
     assert out2 == out
     assert not os.path.isdir(cat.path("t__upsert_old"))
 
 
-def test_snapshot_head_fallback_chain(spark, tmp_path, monkeypatch):
+def test_snapshot_head_fallback_chain(spark, tmp_path, monkeypatch, caplog):
     """Head resolution degrades refs -> history -> committed_at ordering:
     a catalog without refs/history metadata tables still pins a snapshot,
-    and the history path filters to current-ancestor rows."""
+    and the history path filters to current-ancestor rows. Every tier it
+    skips over is logged as a WARNING naming the exception class."""
     sqls: list[str] = []
 
     def make_sql(serve: set):
@@ -211,12 +198,23 @@ def test_snapshot_head_fallback_chain(spark, tmp_path, monkeypatch):
     cat = Catalog(spark, str(tmp_path / "fb"))
     cat.use_iceberg = True
 
+    def warnings():
+        out = [
+            r.getMessage() for r in caplog.records if r.levelno == logging.WARNING
+        ]
+        caplog.clear()
+        return out
+
+    caplog.set_level(logging.WARNING, logger=catalog_mod.__name__)
     monkeypatch.setattr(spark, "sql", make_sql({"refs", "history"}), raising=False)
     assert cat._iceberg_snapshot_id("t") == 11
+    assert warnings() == []
 
     monkeypatch.setattr(spark, "sql", make_sql({"history"}), raising=False)
     assert cat._iceberg_snapshot_id("t") == 22
     assert any(".history" in q and "is_current_ancestor" in q for q in sqls)
+    (w,) = warnings()
+    assert ".refs" in w and "RuntimeError" in w
 
     monkeypatch.setattr(spark, "sql", make_sql(set()), raising=False)
     assert cat._iceberg_snapshot_id("t") == 33
@@ -224,6 +222,24 @@ def test_snapshot_head_fallback_chain(spark, tmp_path, monkeypatch):
         ".snapshots" in q and "ORDER BY committed_at DESC, snapshot_id DESC" in q
         for q in sqls
     )
+    w_refs, w_hist = warnings()
+    assert ".refs" in w_refs and "RuntimeError" in w_refs
+    assert ".history" in w_hist and "RuntimeError" in w_hist
+
+    # no tier answers: the head is None, and the last tier is logged too
+    def no_sql(query, *a, **kw):
+        raise ValueError("no metadata tables")
+
+    monkeypatch.setattr(spark, "sql", no_sql, raising=False)
+    assert cat._iceberg_snapshot_id("t") is None
+    w = warnings()
+    assert len(w) == 3 and ".snapshots" in w[2]
+    assert all("ValueError" in m for m in w)
+
+    # per-file lineage: an unreadable .files table yields [] and a warning
+    assert cat._iceberg_file_counts("t") == []
+    (w,) = warnings()
+    assert ".files" in w and "ValueError" in w
 
 
 def test_snapshot_head_resolution_order_and_short_circuit(

@@ -155,46 +155,34 @@ def test_fingerprint_invalidation(spark, catalog):
     assert catalog.exists("mentions")
 
 
-def test_upsert_replaces_matched_keys_and_appends_new(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from thesaurus_based_ner_spark.sources.catalog import Catalog
-
+def test_replace_groups_sheds_keeps_and_appends_groups(spark, tmp_path):
+    """Parquet group replacement: a shrunk group sheds its stale rows, an
+    untouched group keeps its rows, a new group is appended, and the
+    lineage sidecar survives the rename-aside swap."""
     cat = Catalog(spark, str(tmp_path / "cat"))
-    base = spark.range(0, 10).select(
-        F.col("id").alias("k"), F.lit("old").alias("v")
+    schema = "url string, pos int, v string"
+    base = spark.createDataFrame(
+        [("a", 0, "old"), ("a", 1, "old"), ("a", 2, "old"),
+         ("b", 0, "old"), ("b", 1, "old")],
+        schema,
     )
-    cat.upsert("kv", base, keys=["k"])
-    # re-crawl: keys 5-9 updated, 10-12 new
-    delta = spark.range(5, 13).select(
-        F.col("id").alias("k"), F.lit("new").alias("v")
+    cat.replace_groups("men", base, ["url"])
+    # re-crawl: page a now yields one mention, page c is new, b untouched
+    delta = spark.createDataFrame(
+        [("a", 5, "new"), ("c", 0, "new"), ("c", 1, "new")], schema
     )
-    out = cat.upsert("kv", delta, keys=["k"])
-    rows = {r.k: r.v for r in out.collect()}
-    assert len(rows) == 13
-    assert all(rows[k] == "old" for k in range(5))
-    assert all(rows[k] == "new" for k in range(5, 13))
-    # lineage sidecar survives the swap and points at the table
-    meta = [m for m in cat.lineage() if m["table"] == "kv"]
-    assert meta and meta[0]["rows_out"] == 13
-
-
-def test_upsert_dedupes_incoming_keys_deterministically(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from thesaurus_based_ner_spark.sources.catalog import Catalog
-
-    cat = Catalog(spark, str(tmp_path / "cat"))
-    cat.upsert("kv", spark.range(0, 3).select(
-        F.col("id").alias("k"), F.lit("old").alias("v")), keys=["k"])
-    dup = spark.sql(
-        "SELECT * FROM VALUES (1, 'b'), (1, 'a'), (7, 'z'), (7, 'y') AS t(k, v)"
-    )
-    out = cat.upsert("kv", dup, keys=["k"])
-    rows = {r.k: r.v for r in out.collect()}
-    # one row per key; min-struct winner ('a' < 'b', 'y' < 'z')
-    assert rows == {0: "old", 1: "a", 2: "old", 7: "y"}
-    assert out.count() == 4
+    out = cat.replace_groups("men", delta, ["url"])
+    assert sorted(map(tuple, out.collect())) == [
+        ("a", 5, "new"),
+        ("b", 0, "old"), ("b", 1, "old"),
+        ("c", 0, "new"), ("c", 1, "new"),
+    ]
+    (meta,) = [m for m in cat.lineage() if m["table"] == "men"]
+    assert meta["rows_out"] == 5
+    assert meta["stage"] == "replace:men"
+    assert not os.path.exists(cat.path("men__upsert_tmp"))
+    assert not os.path.exists(cat._meta_path("men__upsert_tmp"))
+    assert not os.path.exists(cat.path("men__upsert_old"))
 
 
 def test_pipeline_with_dataframe_thesaurus(spark, triples, tmp_path):

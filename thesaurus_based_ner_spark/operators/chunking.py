@@ -90,32 +90,13 @@ def rule_chunks_df(
     return chunks
 
 
-def chunks_df(
-    sentences: DataFrame,
-    id_cols: list[str],
-    max_len: int = 6,
-    strategy: str = "rule",
-    model_factory=None,
-) -> DataFrame:
-    """Chunker strategy dispatcher: "rule" = pure-SQL island detection
-    (the scale default), "np" = model-based mapInPandas (np_chunks_df;
-    spaCy-shaped, deterministic POS-lite model by default)."""
-    if strategy == "rule":
-        return rule_chunks_df(sentences, id_cols, max_len=max_len)
-    if strategy == "np":
-        return np_chunks_df(
-            sentences, id_cols, max_len=max_len, model_factory=model_factory
-        )
-    raise ValueError(f"unknown chunker strategy {strategy!r}")
-
-
 class PosLiteNPModel:
     """Deterministic stand-in for the reference's spaCy noun-chunk model
     (chunker/spacy_model.py:93-118): same predict(tokens) → [(start, end)]
     contract, implemented as a pinned POS-lite heuristic — noun phrases =
     maximal runs of content word-tokens, split into ≤ max_len windows
-    (identical semantics to rule_chunks_df, so the two chunker strategies
-    are parity-testable). A real spaCy pipeline drops into the same
+    (identical semantics to rule_chunks_df, so the two chunkers are
+    parity-testable). A real spaCy pipeline drops into the same
     model_factory slot; SURVEY argues determinism for the default.
     """
 
@@ -147,13 +128,13 @@ def np_chunks_df(
     model_factory=None,
     tokens_col: str = "tokens",
 ) -> DataFrame:
-    """U3 model-based chunker strategy (`chunker="np"`): Arrow-batched
-    mapInPandas with ITERATOR-INIT — the model is constructed once per
-    task, before the batch loop, then reused for every Arrow batch (the
-    pattern that amortizes a spaCy `spacy.load` across a whole partition;
-    heavy factories should additionally memoize in module state). Default
-    model is the pinned PosLiteNPModel, so output is deterministic and
-    equals rule_chunks_df.
+    """U3 model-based chunker: Arrow-batched mapInPandas with
+    ITERATOR-INIT — the model is constructed once per task, before the
+    batch loop, then reused for every Arrow batch (the pattern that
+    amortizes a spaCy `spacy.load` across a whole partition; heavy
+    factories should additionally memoize in module state). Default model
+    is the pinned PosLiteNPModel, so output is deterministic and equals
+    rule_chunks_df.
     """
     factory = model_factory or (lambda: PosLiteNPModel(max_len))
     dtypes = {f.name: f.dataType.simpleString() for f in sentences.schema}

@@ -10,7 +10,26 @@ Span tables: (doc-id cols..., m_start, m_end, label).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
+
+
+def _prf(
+    tp: Column, n_pred: Column, n_gold: Column, tp_gold: Column | None = None
+) -> list[Column]:
+    """precision / recall / f1 columns, each rounded to 6 places; a zero
+    denominator scores 0.0. `tp_gold` is the recall numerator when it
+    differs from the precision one (lenient matching counts matched pred
+    and matched gold spans separately)."""
+    if tp_gold is None:
+        tp_gold = tp
+    prec = F.when(n_pred > 0, tp / n_pred).otherwise(0.0)
+    rec = F.when(n_gold > 0, tp_gold / n_gold).otherwise(0.0)
+    f1 = F.when((prec + rec) > 0, F.lit(2) * prec * rec / (prec + rec)).otherwise(0.0)
+    return [
+        F.round(prec, 6).alias("precision"),
+        F.round(rec, 6).alias("recall"),
+        F.round(f1, 6).alias("f1"),
+    ]
 
 
 def strict_prf(pred: DataFrame, gold: DataFrame, id_cols: list[str]) -> DataFrame:
@@ -34,18 +53,11 @@ def strict_prf(pred: DataFrame, gold: DataFrame, id_cols: list[str]) -> DataFram
             ).otherwise(0)
         ).alias("tp"),
     )
-    prec = F.when(F.col("n_pred") > 0, F.col("tp") / F.col("n_pred")).otherwise(0.0)
-    rec = F.when(F.col("n_gold") > 0, F.col("tp") / F.col("n_gold")).otherwise(0.0)
-    f1 = F.when(
-        (prec + rec) > 0, F.lit(2) * prec * rec / (prec + rec)
-    ).otherwise(0.0)
     return agg.select(
         F.coalesce("n_pred", F.lit(0)).cast("bigint").alias("n_pred"),
         F.coalesce("n_gold", F.lit(0)).cast("bigint").alias("n_gold"),
         F.coalesce("tp", F.lit(0)).cast("bigint").alias("tp"),
-        F.round(prec, 6).alias("precision"),
-        F.round(rec, 6).alias("recall"),
-        F.round(f1, 6).alias("f1"),
+        *_prf(F.col("tp"), F.col("n_pred"), F.col("n_gold")),
     )
 
 
@@ -72,17 +84,12 @@ def strict_prf_by_label(
         .join(tp, "label", "left")
         .fillna(0, ["tp", "n_pred", "n_gold"])
     )
-    p = F.when(F.col("n_pred") > 0, F.col("tp") / F.col("n_pred")).otherwise(0.0)
-    r = F.when(F.col("n_gold") > 0, F.col("tp") / F.col("n_gold")).otherwise(0.0)
-    f1 = F.when((p + r) > 0, 2 * p * r / (p + r)).otherwise(0.0)
     return out.select(
         "label",
         "n_pred",
         "n_gold",
         "tp",
-        F.round(p, 6).alias("precision"),
-        F.round(r, 6).alias("recall"),
-        F.round(f1, 6).alias("f1"),
+        *_prf(F.col("tp"), F.col("n_pred"), F.col("n_gold")),
     )
 
 
@@ -125,21 +132,15 @@ def lenient_prf(pred: DataFrame, gold: DataFrame, id_cols: list[str]) -> DataFra
         F.countDistinct(F.when(both, pkey)).alias("pred_overlapped"),
         F.countDistinct(F.when(both, gkey)).alias("gold_overlapped"),
     )
-    prec = F.when(
-        F.col("n_pred") > 0, F.col("pred_overlapped") / F.col("n_pred")
-    ).otherwise(0.0)
-    rec = F.when(
-        F.col("n_gold") > 0, F.col("gold_overlapped") / F.col("n_gold")
-    ).otherwise(0.0)
-    f1 = F.when((prec + rec) > 0, F.lit(2) * prec * rec / (prec + rec)).otherwise(0.0)
     return agg.select(
         F.col("n_pred").cast("bigint").alias("n_pred"),
         F.col("n_gold").cast("bigint").alias("n_gold"),
         F.col("pred_overlapped").cast("bigint").alias("pred_overlapped"),
         F.col("gold_overlapped").cast("bigint").alias("gold_overlapped"),
-        F.round(prec, 6).alias("precision"),
-        F.round(rec, 6).alias("recall"),
-        F.round(f1, 6).alias("f1"),
+        *_prf(
+            F.col("pred_overlapped"), F.col("n_pred"), F.col("n_gold"),
+            tp_gold=F.col("gold_overlapped"),
+        ),
     )
 
 
@@ -158,16 +159,11 @@ def on_head_prf(pred: DataFrame, gold: DataFrame, id_cols: list[str]) -> DataFra
             F.when(F.col("__p").isNotNull() & F.col("__g").isNotNull(), 1).otherwise(0)
         ).alias("tp"),
     )
-    prec = F.when(F.col("n_pred") > 0, F.col("tp") / F.col("n_pred")).otherwise(0.0)
-    rec = F.when(F.col("n_gold") > 0, F.col("tp") / F.col("n_gold")).otherwise(0.0)
-    f1 = F.when((prec + rec) > 0, F.lit(2) * prec * rec / (prec + rec)).otherwise(0.0)
     return agg.select(
         F.col("n_pred").cast("bigint").alias("n_pred"),
         F.col("n_gold").cast("bigint").alias("n_gold"),
         F.col("tp").cast("bigint").alias("tp"),
-        F.round(prec, 6).alias("precision"),
-        F.round(rec, 6).alias("recall"),
-        F.round(f1, 6).alias("f1"),
+        *_prf(F.col("tp"), F.col("n_pred"), F.col("n_gold")),
     )
 
 
@@ -254,16 +250,11 @@ def negative_token_prf(
     )
     n_p_ = F.coalesce(F.col("n_p"), F.lit(0))
     n_g_ = F.coalesce(F.col("n_g"), F.lit(0))
-    prec = F.when(n_p_ > 0, F.col("tp") / n_p_).otherwise(0.0)
-    rec = F.when(n_g_ > 0, F.col("tp") / n_g_).otherwise(0.0)
-    f1 = F.when((prec + rec) > 0, 2 * prec * rec / (prec + rec)).otherwise(0.0)
     return agg.select(
         n_p_.cast("bigint").alias("n_pred_neg"),
         n_g_.cast("bigint").alias("n_gold_neg"),
         F.col("tp").cast("bigint").alias("tp"),
-        F.round(prec, 6).alias("precision"),
-        F.round(rec, 6).alias("recall"),
-        F.round(f1, 6).alias("f1"),
+        *_prf(F.col("tp"), n_p_, n_g_),
     )
 
 
@@ -354,18 +345,13 @@ def prf_by_length(
         .join(tp, "bin_lo", "left")
         .fillna(0, ["n_pred", "n_gold", "tp"])
     )
-    prec = F.when(F.col("n_pred") > 0, F.col("tp") / F.col("n_pred")).otherwise(0.0)
-    rec = F.when(F.col("n_gold") > 0, F.col("tp") / F.col("n_gold")).otherwise(0.0)
-    f1 = F.when((prec + rec) > 0, F.lit(2) * prec * rec / (prec + rec)).otherwise(0.0)
     return out.select(
         "bin_lo",
         (F.col("bin_lo") + bin_size).cast("bigint").alias("bin_hi"),
         F.col("n_pred").cast("bigint").alias("n_pred"),
         F.col("n_gold").cast("bigint").alias("n_gold"),
         F.col("tp").cast("bigint").alias("tp"),
-        F.round(prec, 6).alias("precision"),
-        F.round(rec, 6).alias("recall"),
-        F.round(f1, 6).alias("f1"),
+        *_prf(F.col("tp"), F.col("n_pred"), F.col("n_gold")),
     )
 
 

@@ -35,7 +35,7 @@ from thesaurus_based_ner_spark.operators.canonicalize import (
 )
 from thesaurus_based_ner_spark.operators.chunking import (
     CHUNK_STOP,
-    chunks_df,
+    np_chunks_df,
     rule_chunks_df,
     type_chunks_suffix,
 )
@@ -1718,12 +1718,12 @@ def chunked_mentions(spark, sf_dir):
     """,
 )
 def np_chunks(spark, sf_dir):
-    """U3 model-based chunker (chunker="np"): iterator-init mapInPandas
+    """U3 model-based chunker (np_chunks_df): iterator-init mapInPandas
     running the pinned POS-lite noun-phrase model (spaCy slot-compatible),
     value-checked against the same run-window SQL the rule chunker obeys —
-    the two strategies are interchangeable by contract."""
+    the two chunkers are interchangeable by contract."""
     snts = _en_doc_tokens(spark, sf_dir)
-    return chunks_df(snts, ["doc_id"], max_len=6, strategy="np").select(
+    return np_chunks_df(snts, ["doc_id"], max_len=6).select(
         "doc_id", "m_start", "m_end", "surface"
     )
 
