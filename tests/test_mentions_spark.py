@@ -1,23 +1,23 @@
-"""Parity: both Spark mention strategies == pure-Python oracle."""
+"""Parity: the Spark trie matcher, fed by a broadcast dict or by a
+parquet side file, == the pure-Python oracle."""
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from thesaurus_based_ner_spark.functions.matcher import build_matcher, match_sentence
+from thesaurus_based_ner_spark.functions.matcher import (
+    build_matcher,
+    match_sentence,
+    resolve_overlaps,
+)
 from thesaurus_based_ner_spark.functions.text import sentencize, tokenize
 from thesaurus_based_ner_spark.operators.mentions import (
     bio_tags_df,
-    detect_mentions_df,
     detect_mentions_trie,
     detect_mentions_trie_dist,
-    thesaurus_dim_from_df,
-    thesaurus_with_case,
     tokenize_df,
 )
 from thesaurus_based_ner_spark.sources.webtext import (
     THESAURUS,
-    make_document,
     synth_webtext,
 )
 
@@ -34,11 +34,11 @@ def sentences(spark):
     return tokenize_df(snts, "snt").cache()
 
 
-def oracle_mentions(spark_rows):
+def oracle_mentions(spark_rows, spans=match_sentence):
     trie = build_matcher(TERM2LABEL, tokenize)
     out = set()
     for url, snt_id, toks in spark_rows:
-        for s, e, lab in match_sentence(trie, list(toks)):
+        for s, e, lab in spans(trie, list(toks)):
             out.add((url, snt_id, s, e, " ".join(toks[s : e]), lab))
     return out
 
@@ -50,9 +50,8 @@ def _collect(df):
     }
 
 
-def test_df_strategy_matches_oracle(spark, sentences):
-    th = thesaurus_with_case(spark, TERM2LABEL)
-    got = _collect(detect_mentions_df(sentences, th, ["url", "snt_id"]))
+def test_trie_strategy_matches_oracle(spark, sentences):
+    got = _collect(detect_mentions_trie(sentences, TERM2LABEL, ["url", "snt_id"]))
     want = oracle_mentions(
         [(r.url, r.snt_id, r.tokens) for r in sentences.collect()]
     )
@@ -60,38 +59,38 @@ def test_df_strategy_matches_oracle(spark, sentences):
     assert len(got) > 50  # corpus actually exercises the matcher
 
 
-def test_trie_strategy_matches_oracle(spark, sentences):
-    got = _collect(detect_mentions_trie(sentences, TERM2LABEL, ["url", "snt_id"]))
+def test_trie_resolve_only_matches_oracle(spark, sentences):
+    """merge_adjacent=False keeps overlap-resolved spans unmerged — the
+    input chunk shifting and multi-label typing need. The synthetic pages
+    hold no adjacent terms, so one extra sentence adds a pair."""
+    adjacent = tokenize_df(
+        spark.createDataFrame(
+            [("adjacent", 0, "Tokyo France met.")],
+            "url string, snt_id int, snt string",
+        ),
+        "snt",
+    )
+    snts = sentences.unionByName(adjacent)
+    got = _collect(
+        detect_mentions_trie(
+            snts, TERM2LABEL, ["url", "snt_id"], merge_adjacent=False
+        )
+    )
     want = oracle_mentions(
-        [(r.url, r.snt_id, r.tokens) for r in sentences.collect()]
+        [(r.url, r.snt_id, r.tokens) for r in snts.collect()],
+        spans=lambda trie, toks: resolve_overlaps(trie.match(toks)),
     )
     assert got == want
+    assert {m for m in got if m[0] == "adjacent"} == {
+        ("adjacent", 0, 0, 1, "Tokyo", "City"),
+        ("adjacent", 0, 1, 2, "France", "Country"),
+    }
 
 
 def _terms_df(spark):
     return spark.createDataFrame(
         list(TERM2LABEL.items()), "term string, label string"
     )
-
-
-def test_dim_from_df_matches_values_dim(spark):
-    """thesaurus_dim_from_df (DataFrame-native, for 23M-surface dims) must
-    produce the exact rows of the driver-side thesaurus_with_case."""
-    want = {
-        tuple(r) for r in thesaurus_with_case(spark, TERM2LABEL).collect()
-    }
-    got = {tuple(r) for r in thesaurus_dim_from_df(_terms_df(spark)).collect()}
-    assert got == want
-
-
-def test_df_strategy_with_df_only_dim(spark, sentences):
-    """detect_mentions_df fed a dim built WITHOUT any driver dict/VALUES."""
-    th = thesaurus_dim_from_df(_terms_df(spark))
-    got = _collect(detect_mentions_df(sentences, th, ["url", "snt_id"]))
-    want = oracle_mentions(
-        [(r.url, r.snt_id, r.tokens) for r in sentences.collect()]
-    )
-    assert got == want
 
 
 def test_trie_dist_strategy_matches_oracle(spark, sentences, tmp_path):
@@ -153,29 +152,6 @@ def test_trie_dist_rewrites_uncommitted_side_file(spark, sentences, tmp_path):
     assert (path / "_SUCCESS").exists()
 
 
-def test_df_strategy_semi_join_pruning_path(spark, sentences):
-    """>10k distinct first tokens forces the broadcast-semi-join pruning
-    path (no IN list); results must be unchanged."""
-    import thesaurus_based_ner_spark.operators.mentions as M
-
-    filler = [(f"zqx{i}filler", "Filler") for i in range(10_050)]
-    big = dict(TERM2LABEL) | dict(filler)
-    th = thesaurus_dim_from_df(
-        spark.createDataFrame(list(big.items()), "term string, label string")
-    )
-    old = M._FT_IN_LIMIT
-    try:
-        M._FT_IN_LIMIT = 1_000  # keep the fixture fast; the path is what matters
-        got = _collect(detect_mentions_df(sentences, th, ["url", "snt_id"]))
-    finally:
-        M._FT_IN_LIMIT = old
-    # filler terms never occur in the corpus → same matches as the base dim
-    want = oracle_mentions(
-        [(r.url, r.snt_id, r.tokens) for r in sentences.collect()]
-    )
-    assert got == want
-
-
 def test_spark_sentencize_matches_python(spark):
     # Java regex and Python re agree on the sentence splitter
     docs = synth_webtext(spark, 40)
@@ -205,8 +181,7 @@ def test_webtext_deterministic_at_any_partitioning(spark):
 
 
 def test_bio_tags(spark, sentences):
-    th = thesaurus_with_case(spark, TERM2LABEL)
-    mentions = detect_mentions_df(sentences, th, ["url", "snt_id"])
+    mentions = detect_mentions_trie(sentences, TERM2LABEL, ["url", "snt_id"])
     tagged = bio_tags_df(sentences, mentions, ["url", "snt_id"])
     rows = tagged.select("url", "snt_id", "tokens", "ner_tags").collect()
     trie = build_matcher(TERM2LABEL, tokenize)
@@ -220,13 +195,13 @@ def test_bio_tags(spark, sentences):
     assert any(t != "O" for r in rows for t in r.ner_tags)
 
 
-def test_df_strategy_empty_dataframe_dim(spark, sentences):
-    """An empty DataFrame dim yields zero mentions with the right schema
-    (thesaurus_with_case raises, but DataFrame dims can legally be empty
-    — e.g. a fully filtered thesaurus)."""
-    empty = thesaurus_dim_from_df(
-        spark.createDataFrame([], "term string, label string")
+def test_df_strategy_empty_dataframe_dim(spark, sentences, tmp_path):
+    """An empty DataFrame thesaurus yields zero mentions with the right
+    schema (a dict thesaurus cannot be empty, but a DataFrame one can
+    legally be — e.g. a fully filtered thesaurus)."""
+    empty = spark.createDataFrame([], "term string, label string")
+    out = detect_mentions_trie_dist(
+        sentences, empty, ["url", "snt_id"], side_dir=str(tmp_path)
     )
-    out = detect_mentions_df(sentences, empty, ["url", "snt_id"])
     assert out.columns == ["url", "snt_id", "m_start", "m_end", "surface", "label"]
     assert out.count() == 0

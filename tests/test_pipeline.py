@@ -187,7 +187,9 @@ def test_replace_groups_sheds_keeps_and_appends_groups(spark, tmp_path):
 
 def test_pipeline_with_dataframe_thesaurus(spark, triples, tmp_path):
     """The flagship path with the thesaurus supplied ONLY as a DataFrame
-    (the 23M-surface shape): identical triples to the dict-dim run."""
+    (the 23M-surface shape): the side-file trie writes the same triples
+    as the broadcast trie of the dict-dim run, and its side file lands
+    under the catalog root, where executors can read it."""
     terms_df = spark.createDataFrame(
         list(TERM2LABEL.items()), "term string, label string"
     )
@@ -203,6 +205,9 @@ def test_pipeline_with_dataframe_thesaurus(spark, triples, tmp_path):
     )
     want = {tuple(r) for r in triples.collect()}
     assert {tuple(r) for r in got.collect()} == want
+    side = tmp_path / "cat_dfth" / "thesaurus_side"
+    (fp_dir,) = [d for d in os.listdir(side) if d.startswith("tbner_th_")]
+    assert (side / fp_dir / "_SUCCESS").exists()
 
 
 def test_pipeline_salted_canonicalize_parity(spark, triples, tmp_path):

@@ -4,8 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from thesaurus_based_ner_spark.operators.mentions import (
-    detect_mentions_df,
-    thesaurus_with_case,
+    detect_mentions_trie,
     tokenize_df,
 )
 from thesaurus_based_ner_spark.operators.pseudo import (
@@ -24,8 +23,9 @@ def corpus(spark):
         "url", F.posexplode(F.split("text", r"(?<=[.!?])\s+")).alias("snt_id", "snt")
     )
     sentences = tokenize_df(snts, "snt").drop("snt").cache()
-    th = thesaurus_with_case(spark, dict(THESAURUS))
-    mentions = detect_mentions_df(sentences, th, ["url", "snt_id"]).cache()
+    mentions = detect_mentions_trie(
+        sentences, dict(THESAURUS), ["url", "snt_id"]
+    ).cache()
     return sentences, mentions
 
 

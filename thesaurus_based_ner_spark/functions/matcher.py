@@ -20,9 +20,10 @@ tries) the matching semantics of the reference:
 - BIO encode/decode with ``nc-*`` negative categories dropped at encode
   time (``/root/reference/src/ner_model/multi_label/two_stage.py:47-65``).
 
-These functions run (a) inside Arrow-batched pandas UDFs (mapInPandas) and
-(b) as the oracle for parity tests of the pure-DataFrame implementation in
-``operators/mentions.py``.
+These functions run (a) inside the Arrow-batched trie UDF (mapInPandas)
+of ``operators/mentions.py`` and (b) as the oracle for its parity tests
+and for the relational rules built on the same semantics (the window
+resolver ``resolve_overlaps_df``, chunk typing).
 """
 
 from __future__ import annotations
@@ -124,8 +125,8 @@ def build_matcher(term2label: dict[str, str], tokenizer) -> TokenTrie:
     cs_terms, _ = split_case_sensitivity(list(term2label))
     trie = TokenTrie()
     # sorted insertion: colliding tokenized forms resolve to the
-    # lexicographically LAST term, the same dedup rule the DF strategy's
-    # thesaurus_with_case applies — dict order would break strategy parity
+    # lexicographically LAST term, the same dedup rule thesaurus_with_case
+    # applies — dict order would make the label depend on input order
     for term, label in sorted(term2label.items()):
         trie.insert(tokenizer(term), label, case_sensitive=term in cs_terms)
     return trie

@@ -23,6 +23,28 @@ from thesaurus_based_ner_spark.operators.graph import (
 )
 
 
+def _normalized_surfaces(anchor: DataFrame) -> DataFrame:
+    """Distinct (entity, nsurf) rows: the surfaces that may form an edge,
+    lowercased.
+
+    NULL/empty surfaces must NOT edge: Window.partitionBy treats NULL as
+    an ordinary key, so without this filter every entity with an
+    unparsed surface would star-edge to one hub and collapse into a
+    single canonical cluster. The pre-star pairwise join was only
+    NULL-rejecting — empty/whitespace surfaces DID match each other
+    ('' == '') and clustered there; dropping them here is an intentional
+    divergence (an all-empty-surface mega-cluster is never a desirable
+    canonical entity), not an equivalence (ADVICE r4).
+    """
+    return (
+        anchor.filter(
+            F.col("surface").isNotNull() & (F.trim(F.col("surface")) != "")
+        )
+        .select(F.col("entity"), F.lower(F.col("surface")).alias("nsurf"))
+        .distinct()
+    )
+
+
 def surface_star_edges(anchor: DataFrame, n_salt: int = 1) -> DataFrame:
     """Shared-normalized-surface edges as a STAR to the per-surface hub.
 
@@ -43,21 +65,7 @@ def surface_star_edges(anchor: DataFrame, n_salt: int = 1) -> DataFrame:
     linear: ≤ S-1 within-bucket + ≤ n_salt-1 hub edges per surface.
     Both passes are windows — no join, no cartesian product.
     """
-    # NULL/empty surfaces must NOT edge: Window.partitionBy treats NULL as
-    # an ordinary key, so without this filter every entity with an
-    # unparsed surface would star-edge to one hub and collapse into a
-    # single canonical cluster. The pre-star pairwise join was only
-    # NULL-rejecting — empty/whitespace surfaces DID match each other
-    # ('' == '') and clustered there; dropping them here is an intentional
-    # divergence (an all-empty-surface mega-cluster is never a desirable
-    # canonical entity), not an equivalence (ADVICE r4).
-    surf = (
-        anchor.filter(
-            F.col("surface").isNotNull() & (F.trim(F.col("surface")) != "")
-        )
-        .select(F.col("entity"), F.lower(F.col("surface")).alias("nsurf"))
-        .distinct()
-    )
+    surf = _normalized_surfaces(anchor)
     if n_salt <= 1:
         hub = F.min("entity").over(Window.partitionBy("nsurf"))
         return (
@@ -103,22 +111,16 @@ def surface_star_edges(anchor: DataFrame, n_salt: int = 1) -> DataFrame:
 def _surface_skew_stats(anchor: DataFrame) -> tuple[int, int]:
     """(total distinct (entity, nsurf) rows, hottest surface's row count).
 
-    Same normalization as surface_star_edges (null/blank surfaces dropped,
-    lowercase, distinct per entity), so the stats describe exactly the
-    rows the star window will partition. groupBy().count() partially
-    aggregates map-side — the hot key ships ONE partial row per map task,
-    so measuring the skew is itself skew-safe — and the final agg is a
-    1-row scalar collect (bounded driver action).
+    Reads the same _normalized_surfaces as surface_star_edges, so the
+    stats describe exactly the rows the star window will partition.
+    groupBy().count() partially aggregates map-side — the hot key ships
+    ONE partial row per map task, so measuring the skew is itself
+    skew-safe — and the final agg is a 1-row scalar collect (bounded
+    driver action).
     """
-    surf = (
-        anchor.filter(
-            F.col("surface").isNotNull() & (F.trim(F.col("surface")) != "")
-        )
-        .select("entity", F.lower(F.col("surface")).alias("nsurf"))
-        .distinct()
-    )
     row = (
-        surf.groupBy("nsurf")
+        _normalized_surfaces(anchor)
+        .groupBy("nsurf")
         .count()
         .agg(F.sum("count").alias("total"), F.max("count").alias("hot"))
         .collect()[0]

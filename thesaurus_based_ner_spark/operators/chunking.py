@@ -175,8 +175,8 @@ def type_chunks_suffix(chunks: DataFrame, thesaurus: DataFrame) -> DataFrame:
     )
     # honor the case-sensitivity split (string_match.py:91-140): a cs
     # term (acronym) must match the chunk suffix EXACTLY, the ci form
-    # matches lowercased — the same rule detect_mentions_df applies, so
-    # the two matcher paths agree on acronym chunks
+    # matches lowercased — the same rule the mention trie applies, so
+    # chunk typing and mention matching agree on acronym chunks
     lo = F.lower(F.col("surface"))
     ci_hit = (lo == F.col("__t")) | lo.endswith(
         F.concat(F.lit(" "), F.col("__t"))

@@ -18,19 +18,20 @@ that waits for canonical.
 Physical shape of the hot path (SURVEY.md §4), one fused job up to the
 mentions table:
   BatchScan webtext (lang filter pushed down) → mapInPandas[extract] →
-  explode sentences (built-in) → broadcast-trie mapInPandas (dict
-  thesaurus) or broadcast-join n-gram match (DataFrame thesaurus) →
-  window dedup → broadcast link join → repartitionByRange(subj) →
-  partitioned triple write.
+  explode sentences (built-in) → mapInPandas[trie match: overlap
+  resolve + adjacent merge per sentence] → broadcast link join →
+  repartitionByRange(subj) → partitioned triple write.
 
 HTML extraction and trie matching leave the JVM, both as Arrow-batched
-pandas UDFs.
+pandas UDFs. The trie comes from a broadcast dict or, for a DataFrame
+thesaurus, from a parquet side file under the catalog root.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
+import os
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
@@ -45,9 +46,8 @@ from thesaurus_based_ner_spark.operators.linking import (
     link_mentions,
 )
 from thesaurus_based_ner_spark.operators.mentions import (
-    detect_mentions_df,
     detect_mentions_trie,
-    thesaurus_dim_from_df,
+    detect_mentions_trie_dist,
     tokenize_df,
 )
 from thesaurus_based_ner_spark.sources.catalog import Catalog
@@ -92,17 +92,20 @@ def sentence_stage(extracted: DataFrame, lang: str = "en") -> DataFrame:
 
 
 def mention_stage(
-    sentences: DataFrame, term2label: "dict[str, str] | DataFrame"
+    sentences: DataFrame,
+    term2label: "dict[str, str] | DataFrame",
+    catalog_root: str,
 ) -> DataFrame:
-    """The matcher follows the thesaurus's type. A dict (driver-sized)
-    ships as a broadcast to the Arrow-batched trie UDF. A (term, label)
-    DataFrame — the 23M-surface shape, where the dim must never visit the
-    driver — is built into a dim JVM-side (thesaurus_dim_from_df) and
-    matched by the n-gram broadcast join, with no side storage."""
+    """Match with the Arrow-batched trie UDF. A dict (driver-sized) ships
+    as a broadcast. A (term, label) DataFrame — the 23M-surface shape,
+    where the dim must never visit the driver — goes to a parquet side
+    file in `<catalog_root>/thesaurus_side`, which executors read as they
+    read the catalog's tables."""
     ids = ["url", "snt_id"]
     if isinstance(term2label, DataFrame):
-        return detect_mentions_df(
-            sentences, thesaurus_dim_from_df(term2label), ids
+        return detect_mentions_trie_dist(
+            sentences, term2label, ids,
+            side_dir=os.path.join(catalog_root, "thesaurus_side"),
         )
     return detect_mentions_trie(sentences, term2label, ids)
 
@@ -224,7 +227,7 @@ def run_pipeline(
     sentences would write ~3× the corpus to storage per run, and
     recomputing the map prefix after a crash is cheaper than that write
     volume. The corpus is read once and never rewritten. mention_stage
-    picks the matcher from term2label's type.
+    feeds the trie from term2label's type.
     """
     th_fp = (
         _df_digest(term2label)
@@ -286,7 +289,8 @@ def run_pipeline(
         catalog.materialize(
             "mentions",
             lambda: mention_stage(
-                sentence_stage(extract_stage(webtext)), term2label
+                sentence_stage(extract_stage(webtext)), term2label,
+                catalog.root,
             ),
             fingerprint=base_fp,
             stage="match",

@@ -40,7 +40,6 @@ from thesaurus_based_ner_spark.operators.chunking import (
     type_chunks_suffix,
 )
 from thesaurus_based_ner_spark.operators.mentions import (
-    detect_mentions_df,
     detect_mentions_trie,
     detect_mentions_trie_dist,
     resolve_overlaps_df,
@@ -1073,8 +1072,7 @@ _MENTION_CTE = f"""
 
 def _doc_mentions(spark, sf_dir):
     snts = _en_doc_tokens(spark, sf_dir)
-    th = thesaurus_with_case(spark, dict(DOC_THESAURUS))
-    return detect_mentions_df(snts, th, ["doc_id"])
+    return detect_mentions_trie(snts, dict(DOC_THESAURUS), ["doc_id"])
 
 
 @q(
@@ -1897,10 +1895,11 @@ def ann_ivf_topk(spark, sf_dir):
     + "SELECT doc_id, m_start, m_end, surface, label FROM mentions",
 )
 def mention_spans_trie(spark, sf_dir):
-    """The Arrow-batched trie strategy (the north star's named physical
-    shape: per-batch pandas-on-Arrow, broadcast token trie) under the SAME
-    value-exact oracle as the pure-DataFrame strategy — the two plans are
-    interchangeable by contract (operators/mentions.py docstring)."""
+    """The Arrow-batched broadcast trie (the north star's named physical
+    shape: per-batch pandas-on-Arrow, broadcast token trie). Since the
+    trie became the only matcher this runs the same plan as
+    `mention_spans`, under the same value-exact oracle; it stays
+    registered so the query list keeps its names and order."""
     snts = _en_doc_tokens(spark, sf_dir)
     return detect_mentions_trie(snts, dict(DOC_THESAURUS), ["doc_id"]).select(
         "doc_id", "m_start", "m_end", "surface", "label"
@@ -1915,8 +1914,9 @@ def mention_spans_trie(spark, sf_dir):
 def mention_spans_dist(spark, sf_dir):
     """The fully-distributed thesaurus shape: the dim enters ONLY as a
     DataFrame (no driver dict / VALUES), the executor trie is built from
-    the parquet side file (detect_mentions_trie_dist), and the result must
-    hash-match the same oracle as both other strategies."""
+    the parquet side file (detect_mentions_trie_dist, default driver-local
+    side dir under a local master), and the result must hash-match the
+    same oracle as the broadcast-dict feed."""
     snts = _en_doc_tokens(spark, sf_dir)
     terms = spark.createDataFrame(DOC_THESAURUS, "term string, label string")
     return detect_mentions_trie_dist(snts, terms, ["doc_id"]).select(

@@ -30,7 +30,7 @@ from thesaurus_based_ner_spark.operators.chunking import (
     rule_chunks_df,
 )
 from thesaurus_based_ner_spark.operators.mentions import (
-    detect_mentions_df,
+    detect_mentions_trie,
     thesaurus_with_case,
     tokenize_df,
 )
@@ -842,8 +842,9 @@ _CHUNK_CTE = f"""
 def chunk_right_shift(spark, sf_dir):
     snts = _en_doc_tokens(spark, sf_dir)
     chunks = rule_chunks_df(snts, ["doc_id"], max_len=6)
-    th = thesaurus_with_case(spark, dict(DOC_THESAURUS))
-    matches = detect_mentions_df(snts, th, ["doc_id"], merge_adjacent=False)
+    matches = detect_mentions_trie(
+        snts, dict(DOC_THESAURUS), ["doc_id"], merge_adjacent=False
+    )
     return right_shift_match_chunks(
         chunks.select("doc_id", "m_start", "m_end"),
         matches.select("doc_id", "m_start", "m_end", "label"),
@@ -878,7 +879,9 @@ def chunk_right_shift(spark, sf_dir):
 def msmlc_exploded(spark, sf_dir):
     snts = _en_doc_tokens(spark, sf_dir)
     th = thesaurus_with_case(spark, dict(DOC_THESAURUS))
-    resolved = detect_mentions_df(snts, th, ["doc_id"], merge_adjacent=False)
+    resolved = detect_mentions_trie(
+        snts, dict(DOC_THESAURUS), ["doc_id"], merge_adjacent=False
+    )
     multi = resolved.join(
         F.broadcast(
             th.select(

@@ -29,10 +29,7 @@ from thesaurus_based_ner_spark.operators.gold import (
     remove_space_tokens_df,
     split_doc_sentences_df,
 )
-from thesaurus_based_ner_spark.operators.mentions import (
-    detect_mentions_df,
-    thesaurus_with_case,
-)
+from thesaurus_based_ner_spark.operators.mentions import detect_mentions_trie
 from thesaurus_based_ner_spark.plans.queries import (
     _MENTION_CTE,
     _SQL_TOKEN_RE,
@@ -549,8 +546,7 @@ def pseudo_sentences(spark, sf_dir):
     oracle's summed span lengths — a value check on the BIO encoding
     itself (pseudo_dataset.py:87-112)."""
     snts = _en_doc_tokens(spark, sf_dir)
-    th = thesaurus_with_case(spark, dict(DOC_THESAURUS))
-    mentions = detect_mentions_df(snts, th, ["doc_id"])
+    mentions = detect_mentions_trie(snts, dict(DOC_THESAURUS), ["doc_id"])
     ds = pseudo.pseudo_ner_dataset(snts, mentions, ["doc_id"])
     return ds.select(
         "doc_id",

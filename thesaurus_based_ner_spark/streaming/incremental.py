@@ -56,7 +56,9 @@ def incremental_kg(
     candidates = candidate_table(anchor)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        ments = mention_stage(sentence_stage(extract_stage(batch_df)), term2label)
+        ments = mention_stage(
+            sentence_stage(extract_stage(batch_df)), term2label, catalog_root
+        )
         linked = link_mentions(ments, candidates)
         cat.replace_groups(
             "linked_mentions", linked, ["url"], stage=f"link:e{epoch_id}"
