@@ -4,7 +4,7 @@ from pyspark.sql import functions as F
 
 from thesaurus_based_ner_spark.operators import simsearch
 from thesaurus_based_ner_spark.operators.chunking import (
-    rule_chunks_df,
+    np_chunks_df,
     type_chunks_suffix,
 )
 from thesaurus_based_ner_spark.operators.mentions import (
@@ -23,7 +23,7 @@ def test_rule_chunks(spark):
     ).select("doc_id", "tokens")
     chunks = {
         (r.m_start, r.m_end, r.surface)
-        for r in rule_chunks_df(snts, ["doc_id"]).collect()
+        for r in np_chunks_df(snts, ["doc_id"]).collect()
     }
     # "in" and "the" are stopwords → two runs
     assert (0, 3, "big table scan") in chunks
@@ -36,7 +36,7 @@ def test_chunk_window_split(spark):
         spark.createDataFrame([(1, text)], "doc_id long, text string"), "text"
     ).select("doc_id", "tokens")
     spans = sorted(
-        (r.m_start, r.m_end) for r in rule_chunks_df(snts, ["doc_id"]).collect()
+        (r.m_start, r.m_end) for r in np_chunks_df(snts, ["doc_id"]).collect()
     )
     assert spans == [(0, 6), (6, 12), (12, 14)]
 
@@ -149,30 +149,9 @@ def test_unrolled_cosine_is_bitwise_the_fold(spark):
     assert got and all(r.cos == r.ref for r in got)
 
 
-def test_np_chunker_parity_with_rule_chunker(spark):
-    """np_chunks_df (iterator-init mapInPandas, POS-lite model) must equal
-    the pure-SQL rule chunker on the fixture corpus — the two chunkers
-    are interchangeable by contract."""
-    from thesaurus_based_ner_spark.operators.chunking import np_chunks_df
-    from thesaurus_based_ner_spark.sources.webtext import synth_webtext
-
-    docs = synth_webtext(spark, 80).filter(F.col("lang") == "en")
-    snts = tokenize_df(
-        docs.select(F.col("url").alias("doc_id"), "text"), "text"
-    ).select("doc_id", "tokens")
-    key = lambda df: {
-        (r.doc_id, r.m_start, r.m_end, r.surface) for r in df.collect()
-    }
-    rule = key(rule_chunks_df(snts, ["doc_id"]))
-    np_ = key(np_chunks_df(snts, ["doc_id"]))
-    assert rule == np_
-    assert len(rule) > 50
-
-
 def test_np_chunker_custom_model_factory(spark):
     """The model_factory slot accepts any predict(tokens)->spans model
     (the spaCy hook) — a 1-token-span dummy proves the plumbing."""
-    from thesaurus_based_ner_spark.operators.chunking import np_chunks_df
 
     class OneTok:
         def predict(self, toks):

@@ -34,6 +34,20 @@ def sentences(spark):
     return tokenize_df(snts, "snt").cache()
 
 
+@pytest.fixture(scope="module")
+def with_adjacent(spark, sentences):
+    """The synthetic pages hold no adjacent terms, so one pinned sentence
+    adds a pair: the merge branch merges it, resolve-only keeps both."""
+    adjacent = tokenize_df(
+        spark.createDataFrame(
+            [("adjacent", 0, "Tokyo France met.")],
+            "url string, snt_id int, snt string",
+        ),
+        "snt",
+    )
+    return sentences.unionByName(adjacent)
+
+
 def oracle_mentions(spark_rows, spans=match_sentence):
     trie = build_matcher(TERM2LABEL, tokenize)
     out = set()
@@ -50,34 +64,31 @@ def _collect(df):
     }
 
 
-def test_trie_strategy_matches_oracle(spark, sentences):
-    got = _collect(detect_mentions_trie(sentences, TERM2LABEL, ["url", "snt_id"]))
+MERGED_ADJACENT = {("adjacent", 0, 0, 2, "Tokyo France", "Country")}
+
+
+def test_trie_strategy_matches_oracle(spark, with_adjacent):
+    got = _collect(
+        detect_mentions_trie(with_adjacent, TERM2LABEL, ["url", "snt_id"])
+    )
     want = oracle_mentions(
-        [(r.url, r.snt_id, r.tokens) for r in sentences.collect()]
+        [(r.url, r.snt_id, r.tokens) for r in with_adjacent.collect()]
     )
     assert got == want
     assert len(got) > 50  # corpus actually exercises the matcher
+    assert {m for m in got if m[0] == "adjacent"} == MERGED_ADJACENT
 
 
-def test_trie_resolve_only_matches_oracle(spark, sentences):
+def test_trie_resolve_only_matches_oracle(spark, with_adjacent):
     """merge_adjacent=False keeps overlap-resolved spans unmerged — the
-    input chunk shifting and multi-label typing need. The synthetic pages
-    hold no adjacent terms, so one extra sentence adds a pair."""
-    adjacent = tokenize_df(
-        spark.createDataFrame(
-            [("adjacent", 0, "Tokyo France met.")],
-            "url string, snt_id int, snt string",
-        ),
-        "snt",
-    )
-    snts = sentences.unionByName(adjacent)
+    input chunk shifting and multi-label typing need."""
     got = _collect(
         detect_mentions_trie(
-            snts, TERM2LABEL, ["url", "snt_id"], merge_adjacent=False
+            with_adjacent, TERM2LABEL, ["url", "snt_id"], merge_adjacent=False
         )
     )
     want = oracle_mentions(
-        [(r.url, r.snt_id, r.tokens) for r in snts.collect()],
+        [(r.url, r.snt_id, r.tokens) for r in with_adjacent.collect()],
         spans=lambda trie, toks: resolve_overlaps(trie.match(toks)),
     )
     assert got == want
@@ -93,19 +104,20 @@ def _terms_df(spark):
     )
 
 
-def test_trie_dist_strategy_matches_oracle(spark, sentences, tmp_path):
+def test_trie_dist_strategy_matches_oracle(spark, with_adjacent, tmp_path):
     """Executor trie built from the parquet side file, thesaurus supplied
     ONLY as a DataFrame — the fully distributed strategy."""
     got = _collect(
         detect_mentions_trie_dist(
-            sentences, _terms_df(spark), ["url", "snt_id"],
+            with_adjacent, _terms_df(spark), ["url", "snt_id"],
             side_dir=str(tmp_path),
         )
     )
     want = oracle_mentions(
-        [(r.url, r.snt_id, r.tokens) for r in sentences.collect()]
+        [(r.url, r.snt_id, r.tokens) for r in with_adjacent.collect()]
     )
     assert got == want
+    assert {m for m in got if m[0] == "adjacent"} == MERGED_ADJACENT
 
 
 def test_trie_dist_rewrites_uncommitted_side_file(spark, sentences, tmp_path):

@@ -4,17 +4,17 @@ reference's TwoStage model: chunker → DictMatchTyper).
 Reference:
 - chunker: spaCy noun_chunks (/root/reference/src/ner_model/chunker/
   spacy_model.py:93-118) or exhaustive span enumeration ≤ 6 tokens
-  (chunker/abstract_model.py:61-78). For determinism at scale we provide a
-  rule chunker (maximal runs of non-stopword word-tokens, capped) plus the
-  enumerated form; the spaCy path would slot into the same contract behind
-  a flag.
+  (chunker/abstract_model.py:61-78). For determinism at scale the one
+  chunker, np_chunks_df, runs a pinned noun-phrase model (maximal runs of
+  non-stopword word-tokens, capped) per sentence inside an Arrow-batched
+  mapInPandas; a spaCy model slots into its model_factory.
 - typer: longest dictionary term that is a word-boundary SUFFIX of the
   chunk (string_match.py:142-214 get_confirmed_common_suffixes /
   type_chunk).
 - F5 remove_null_chunk: drop untyped chunks (two_stage.py:55-82).
 
-All relational: island detection for chunks, broadcast suffix join for the
-typer, window argmax for longest-suffix selection.
+The typer and the chunk⋈match combo are relational: broadcast suffix join
+for the typer, window argmax for longest-suffix selection.
 """
 
 from __future__ import annotations
@@ -26,77 +26,13 @@ from thesaurus_based_ner_spark.operators.textstats import STOPWORDS
 CHUNK_STOP = sorted(set(STOPWORDS["en"]) | {"in", "on", "at", "by", "says", "say"})
 
 
-def rule_chunks_df(
-    sentences: DataFrame, id_cols: list[str], max_len: int = 6
-) -> DataFrame:
-    """Maximal runs of content word-tokens (not stopword, not punctuation),
-    split into windows of ≤ max_len: (ids..., m_start, m_end, surface).
-
-    Pure SQL: posexplode + island detection over the content mask — the
-    same lag/cumsum shape as W5.
-    """
-    toks = sentences.select(
-        *id_cols, F.posexplode("tokens").alias("pos", "tok")
-    ).withColumn(
-        "is_content",
-        F.col("tok").rlike("^[A-Za-z0-9_]+$")
-        & ~F.lower("tok").isin(*CHUNK_STOP),
-    )
-    w = Window.partitionBy(*id_cols).orderBy("pos")
-    isl = toks.withColumn(
-        "grp",
-        F.sum(
-            F.when(
-                ~F.coalesce(F.lag("is_content").over(w), F.lit(False))
-                | ~F.col("is_content"),
-                1,
-            ).otherwise(0)
-        ).over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    ).filter("is_content")
-    runs = isl.groupBy(*id_cols, "grp").agg(
-        F.min("pos").alias("run_start"),
-        (F.max("pos") + 1).alias("run_end"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "tok"))),
-                lambda s: s["tok"],
-            ),
-            " ",
-        ).alias("run_surface"),
-    )
-    # split runs longer than max_len into tumbling windows of max_len
-    win = F.explode(
-        F.expr(
-            f"""
-            transform(sequence(run_start, run_end - 1, {max_len}), s ->
-              struct(CAST(s AS BIGINT) AS m_start,
-                     CAST(least(s + {max_len}, run_end) AS BIGINT) AS m_end))
-            """
-        )
-    )
-    chunks = runs.select(*id_cols, "run_start", "run_surface", win.alias("w")).select(
-        *id_cols,
-        F.col("w.m_start").alias("m_start"),
-        F.col("w.m_end").alias("m_end"),
-        F.array_join(
-            F.slice(
-                F.split("run_surface", " "),
-                (F.col("w.m_start") - F.col("run_start") + 1).cast("int"),
-                (F.col("w.m_end") - F.col("w.m_start")).cast("int"),
-            ),
-            " ",
-        ).alias("surface"),
-    )
-    return chunks
-
-
 class PosLiteNPModel:
     """Deterministic stand-in for the reference's spaCy noun-chunk model
     (chunker/spacy_model.py:93-118): same predict(tokens) → [(start, end)]
     contract, implemented as a pinned POS-lite heuristic — noun phrases =
-    maximal runs of content word-tokens, split into ≤ max_len windows
-    (identical semantics to rule_chunks_df, so the two chunkers are
-    parity-testable). A real spaCy pipeline drops into the same
+    maximal runs of content word-tokens (not CHUNK_STOP, not punctuation),
+    split into ≤ max_len windows; the DuckDB oracles of the chunk queries
+    state the same rule in SQL. A real spaCy pipeline drops into the same
     model_factory slot; SURVEY argues determinism for the default.
     """
 
@@ -133,8 +69,8 @@ def np_chunks_df(
     batch loop, then reused for every Arrow batch (the pattern that
     amortizes a spaCy `spacy.load` across a whole partition; heavy
     factories should additionally memoize in module state). Default model
-    is the pinned PosLiteNPModel, so output is deterministic and equals
-    rule_chunks_df.
+    is the pinned PosLiteNPModel, so output is deterministic:
+    (ids..., m_start, m_end, surface).
     """
     factory = model_factory or (lambda: PosLiteNPModel(max_len))
     dtypes = {f.name: f.dataType.simpleString() for f in sentences.schema}

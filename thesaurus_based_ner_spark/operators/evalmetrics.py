@@ -180,6 +180,22 @@ def span_detection_prf(
     )
 
 
+def _tokens_under(
+    tokens: DataFrame, spans: DataFrame, id_cols: list[str]
+) -> DataFrame:
+    """The rows of tokens (ids..., pos) that lie inside some span
+    (ids..., m_start, m_end) of the same ids: an interval left-semi join."""
+    return tokens.alias("t").join(
+        spans.alias("s"),
+        [F.col(f"t.{c}") == F.col(f"s.{c}") for c in id_cols]
+        + [
+            F.col("t.pos") >= F.col("s.m_start"),
+            F.col("t.pos") < F.col("s.m_end"),
+        ],
+        "left_semi",
+    )
+
+
 def negative_token_prf(
     tokens: DataFrame,
     pred: DataFrame,
@@ -194,49 +210,14 @@ def negative_token_prf(
     tokens: one row per (ids..., pos). Coverage via interval joins + anti
     joins — token-level but never materializes tag strings.
     """
-    gold_cov = (
-        tokens.alias("t")
-        .join(
-            gold.alias("g"),
-            [F.col(f"t.{c}") == F.col(f"g.{c}") for c in id_cols]
-            + [
-                F.col("t.pos") >= F.col("g.m_start"),
-                F.col("t.pos") < F.col("g.m_end"),
-            ],
-            "left_semi",
-        )
-    )
-    g_neg = tokens.join(gold_cov, id_cols + ["pos"], "left_anti")
+    keys = id_cols + ["pos"]
+    g_neg = tokens.join(_tokens_under(tokens, gold, id_cols), keys, "left_anti")
     nc_pred = pred.filter(F.col("label").startswith("nc-"))
     has_nc = nc_pred.limit(1).count() > 0
     if has_nc:
-        p_neg = (
-            tokens.alias("t")
-            .join(
-                nc_pred.alias("p"),
-                [F.col(f"t.{c}") == F.col(f"p.{c}") for c in id_cols]
-                + [
-                    F.col("t.pos") >= F.col("p.m_start"),
-                    F.col("t.pos") < F.col("p.m_end"),
-                ],
-                "left_semi",
-            )
-        )
+        p_neg = _tokens_under(tokens, nc_pred, id_cols)
     else:
-        covered = (
-            tokens.alias("t")
-            .join(
-                pred.alias("p"),
-                [F.col(f"t.{c}") == F.col(f"p.{c}") for c in id_cols]
-                + [
-                    F.col("t.pos") >= F.col("p.m_start"),
-                    F.col("t.pos") < F.col("p.m_end"),
-                ],
-                "left_semi",
-            )
-        )
-        p_neg = tokens.join(covered, id_cols + ["pos"], "left_anti")
-    keys = id_cols + ["pos"]
+        p_neg = tokens.join(_tokens_under(tokens, pred, id_cols), keys, "left_anti")
     # one job: full-outer join of the two negative-token sets, indicator
     # sums — the previous three separate .count() actions re-ran the
     # interval joins from scratch per metric

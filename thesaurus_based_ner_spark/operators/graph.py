@@ -5,8 +5,12 @@ localCheckpoint every round to cut lineage (SURVEY §7 "what's hard").
 All loops are driver-side control flow over distributed joins. A loop's
 convergence test reads an aggregate observed on the round's own checkpoint
 job (checkpoint_observed): no loop runs a driver action of its own, and
-no loop returns a result it has not seen converge — one that is still
-changing one round past its bound raises RuntimeError.
+no loop but resolve_chains returns a result it has not seen converge —
+one that is still changing one round past its bound raises RuntimeError.
+resolve_chains returns its last targets after max_depth rounds instead,
+on purpose: a redirect cycle never settles, and the connected components
+canonicalize_entities builds from its (src, root) pairs do not depend on
+which cycle member ends up as the root.
 
 The reachability fixpoints (ancestor_closure, descendants_bfs and
 thesaurus.expand_disambiguation) share one semi-naive loop, _semi_naive:
@@ -192,9 +196,14 @@ def resolve_chains(
 
     Semantics of the reference's redirect resolution loop
     (db_pedia.py:55-71): iterate replacing dst by dst's own target until no
-    dst is itself a source. Chains are assumed acyclic (redirect chains);
-    max_depth bounds pathological cycles — on hitting it, remaining rows
-    keep their last target (same as the reference's break-on-no-progress).
+    dst is itself a source. Redirect chains are meant to be acyclic, but a
+    redirect table can hold a cycle, and on a cycle every row moves in
+    every round, so the loop cannot see it converge. It therefore does not
+    raise at max_depth, unlike the other loops here: remaining rows keep
+    their last target (the reference's break-on-no-progress). Every member
+    of a cycle then points at some member of the same cycle, so the
+    connected components canonicalize_entities builds from the (src, root)
+    pairs are the same whichever member that is.
     """
     _ensure_safe_optimizer(edges.sparkSession)
     cur = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("root"))

@@ -36,7 +36,6 @@ from thesaurus_based_ner_spark.operators.canonicalize import (
 from thesaurus_based_ner_spark.operators.chunking import (
     CHUNK_STOP,
     np_chunks_df,
-    rule_chunks_df,
     type_chunks_suffix,
 )
 from thesaurus_based_ner_spark.operators.mentions import (
@@ -1669,7 +1668,7 @@ _STOP_LIST_SQL = ", ".join(f"'{w}'" for w in CHUNK_STOP)
 )
 def chunked_mentions(spark, sf_dir):
     snts = _en_doc_tokens(spark, sf_dir)
-    chunks = rule_chunks_df(snts, ["doc_id"], max_len=6)
+    chunks = np_chunks_df(snts, ["doc_id"], max_len=6)
     th = thesaurus_with_case(spark, dict(DOC_THESAURUS))
     return type_chunks_suffix(chunks, th).select(
         "doc_id", "m_start", "m_end", "surface", "label"
@@ -1716,10 +1715,10 @@ def chunked_mentions(spark, sf_dir):
     """,
 )
 def np_chunks(spark, sf_dir):
-    """U3 model-based chunker (np_chunks_df): iterator-init mapInPandas
+    """U3 chunker (np_chunks_df) on its own: iterator-init mapInPandas
     running the pinned POS-lite noun-phrase model (spaCy slot-compatible),
-    value-checked against the same run-window SQL the rule chunker obeys —
-    the two chunkers are interchangeable by contract."""
+    value-checked against the run-window SQL oracle; chunked_mentions and
+    chunk_right_shift consume the same chunks."""
     snts = _en_doc_tokens(spark, sf_dir)
     return np_chunks_df(snts, ["doc_id"], max_len=6).select(
         "doc_id", "m_start", "m_end", "surface"

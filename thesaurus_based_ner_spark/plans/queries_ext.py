@@ -26,8 +26,8 @@ from thesaurus_based_ner_spark.operators import (
 from thesaurus_based_ner_spark.operators import thesaurus as th_ops
 from thesaurus_based_ner_spark.operators.checkpoint import checkpoint, fork
 from thesaurus_based_ner_spark.operators.chunking import (
+    np_chunks_df,
     right_shift_match_chunks,
-    rule_chunks_df,
 )
 from thesaurus_based_ner_spark.operators.mentions import (
     detect_mentions_trie,
@@ -62,28 +62,34 @@ from thesaurus_based_ner_spark.sources.webtext import (
 # ---------------------------------------------------------------------------
 
 
-def _run_spans(toks: DataFrame, mask) -> DataFrame:
-    """Maximal runs of tokens where mask(tok) holds:
-    (doc_id, m_start, m_end) — same island SQL shape as the oracles."""
-    pos = toks.select(
-        "doc_id", F.posexplode("tokens").alias("pos", "tok")
-    ).withColumn("ok", mask)
-    w = Window.partitionBy("doc_id").orderBy("pos")
+def _island_runs(marked: DataFrame, keys: list[str]) -> DataFrame:
+    """Maximal runs of consecutive `ok` rows in `pos` order within each
+    `keys` group: (keys..., m_start, m_end) — same island SQL shape as
+    the oracles (lag → running sum → filter ok → min/max pos)."""
+    w = Window.partitionBy(*keys).orderBy("pos")
     grp = F.sum(
         F.when(
             ~F.coalesce(F.lag("ok").over(w), F.lit(False)) | ~F.col("ok"), 1
         ).otherwise(0)
     ).over(w.rowsBetween(Window.unboundedPreceding, 0))
     return (
-        pos.withColumn("grp", grp)
+        marked.withColumn("grp", grp)
         .filter("ok")
-        .groupBy("doc_id", "grp")
+        .groupBy(*keys, "grp")
         .agg(
             F.min("pos").cast("bigint").alias("m_start"),
             (F.max("pos") + 1).cast("bigint").alias("m_end"),
         )
         .drop("grp")
     )
+
+
+def _run_spans(toks: DataFrame, mask) -> DataFrame:
+    """Maximal runs of tokens where mask(tok) holds: (doc_id, m_start, m_end)."""
+    pos = toks.select(
+        "doc_id", F.posexplode("tokens").alias("pos", "tok")
+    ).withColumn("ok", mask)
+    return _island_runs(pos, ["doc_id"])
 
 
 def _run_sql(mask_sql: str, suffix: str = "") -> str:
@@ -142,8 +148,8 @@ _NC_MASK_SQL = "regexp_matches(toks[p], '[aeiou]$')"
 _RUN_LABEL_SQL = "CASE WHEN m_end - m_start >= 2 THEN 'MULTI' ELSE 'SINGLE' END"
 
 
-def _labeled_runs(toks: DataFrame, mask) -> DataFrame:
-    runs = _run_spans(toks, mask)
+def _with_run_label(runs: DataFrame) -> DataFrame:
+    """The Spark side of _RUN_LABEL_SQL."""
     return runs.withColumn(
         "label",
         F.when(F.col("m_end") - F.col("m_start") >= 2, "MULTI").otherwise(
@@ -153,11 +159,11 @@ def _labeled_runs(toks: DataFrame, mask) -> DataFrame:
 
 
 def _gold_spans(spark, sf_dir) -> DataFrame:
-    return _labeled_runs(_doc_tokens(spark, sf_dir), _GOLD_MASK_SPARK())
+    return _with_run_label(_run_spans(_doc_tokens(spark, sf_dir), _GOLD_MASK_SPARK()))
 
 
 def _pred_spans(spark, sf_dir) -> DataFrame:
-    return _labeled_runs(_doc_tokens(spark, sf_dir), _PRED_MASK_SPARK())
+    return _with_run_label(_run_spans(_doc_tokens(spark, sf_dir), _PRED_MASK_SPARK()))
 
 
 def _span_diff_frames(spark, sf_dir) -> tuple[DataFrame, DataFrame]:
@@ -192,29 +198,7 @@ def _span_diff_frames(spark, sf_dir) -> tuple[DataFrame, DataFrame]:
             )
         ).alias("m"),
     ).select("doc_id", "pos", F.col("m.side").alias("side"), F.col("m.ok").alias("ok"))
-    w = Window.partitionBy("doc_id", "side").orderBy("pos")
-    grp = F.sum(
-        F.when(
-            ~F.coalesce(F.lag("ok").over(w), F.lit(False)) | ~F.col("ok"), 1
-        ).otherwise(0)
-    ).over(w.rowsBetween(Window.unboundedPreceding, 0))
-    runs = (
-        sides.withColumn("grp", grp)
-        .filter("ok")
-        .groupBy("doc_id", "side", "grp")
-        .agg(
-            F.min("pos").cast("bigint").alias("m_start"),
-            (F.max("pos") + 1).cast("bigint").alias("m_end"),
-        )
-        .withColumn(
-            "label",
-            F.when(
-                F.col("m_end") - F.col("m_start") >= 2, "MULTI"
-            ).otherwise("SINGLE"),
-        )
-        .drop("grp")
-    )
-    runs = checkpoint(runs)
+    runs = checkpoint(_with_run_label(_island_runs(sides, ["doc_id", "side"])))
     # fork: fresh attribute ids per side — the diff plan self-joins the
     # checkpointed frame (gold × pred anti-joins), and Spark 4.1's
     # checkpoint plan copy intermittently trips on shared expr ids
@@ -841,7 +825,7 @@ _CHUNK_CTE = f"""
 )
 def chunk_right_shift(spark, sf_dir):
     snts = _en_doc_tokens(spark, sf_dir)
-    chunks = rule_chunks_df(snts, ["doc_id"], max_len=6)
+    chunks = np_chunks_df(snts, ["doc_id"], max_len=6)
     matches = detect_mentions_trie(
         snts, dict(DOC_THESAURUS), ["doc_id"], merge_adjacent=False
     )
